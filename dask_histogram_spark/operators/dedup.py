@@ -380,6 +380,11 @@ def auto_minhash_params(target_jaccard: float = 0.9,
         "(candidates are verified downstream) or allow wider signatures")
 
 
+# shingles per block of the Arrow fold's lane loop: the block's hash,
+# value and scratch buffers (~0.8 MB) stay resident in a per-core L2
+_FOLD_BLOCK = 1 << 15
+
+
 def _perm_coeffs(num_perm: int, seed: int = 17) -> list[tuple[int, int]]:
     rng = np.random.default_rng(seed)
     # a over the FULL multiplicative range [1, p): see _MERSENNE31 note
@@ -421,7 +426,6 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     # would give every null doc the identical signature (the null
     # shingle hashes to a constant), colliding them all in LSH
     df = df.where(F.col(text_col).isNotNull())
-    hashes = _shingle_hashes(F.col(text_col), shingle_k, hash_fn)
     coeffs = _perm_coeffs(num_perm, seed)
     if method == "auto":
         method = "arrow"
@@ -445,25 +449,32 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
             sigs = np.empty((len(lens), len(An)), dtype=np.int64)
             sh31 = np.uint64(31)
             Hm = H % M  # reduce once: (Hm * a + b) < 2^62 + 2^31, exact
-            # preallocated buffers + in-place ufuncs: the lane loop is
-            # memory-traffic-bound, and the expression form allocated
-            # ~6 temporaries per lane (round-15: 0.65 s -> 0.30 s at
-            # sf0.1, bit-identical)
-            v = np.empty_like(Hm)
-            t = np.empty_like(Hm)
-            mb = np.empty(len(Hm), dtype=bool)
-            for j in range(len(An)):
-                np.multiply(Hm, An[j], out=v)
-                v += Bn[j]
-                np.right_shift(v, sh31, out=t)
-                v &= M
-                v += t                      # < 2^32
-                np.right_shift(v, sh31, out=t)
-                v &= M
-                v += t                      # <= 2^31
-                np.greater_equal(v, M, out=mb)
-                v[mb] -= M                  # == v % M, exactly
-                sigs[:, j] = np.minimum.reduceat(v, offsets).astype(np.int64)
+            # The lane loop is memory-traffic-bound, so it runs over
+            # doc-aligned blocks of ~_FOLD_BLOCK shingles whose buffers
+            # stay cache-resident across all lanes (a doc longer than a
+            # block is a block of its own), with in-place ufuncs and
+            # no per-lane temporaries.
+            starts = np.append(offsets, len(Hm))
+            cuts = np.unique(np.append(np.searchsorted(
+                offsets, np.arange(0, len(Hm), _FOLD_BLOCK)), len(lens)))
+            for d0, d1 in zip(cuts[:-1], cuts[1:]):
+                hb = Hm[starts[d0]:starts[d1]]
+                seg = offsets[d0:d1] - starts[d0]
+                v = np.empty_like(hb)
+                t = np.empty_like(hb)
+                mb = np.empty(len(hb), dtype=bool)
+                for j in range(len(An)):
+                    np.multiply(hb, An[j], out=v)
+                    v += Bn[j]
+                    np.right_shift(v, sh31, out=t)
+                    v &= M
+                    v += t                      # < 2^32
+                    np.right_shift(v, sh31, out=t)
+                    v &= M
+                    v += t                      # <= 2^31
+                    np.greater_equal(v, M, out=mb)
+                    v[mb] -= M                  # == v % M, exactly
+                    sigs[d0:d1, j] = np.minimum.reduceat(v, seg)
             return pd.Series(list(sigs))
 
         if hash_fn == "fnv1a32":
@@ -491,6 +502,7 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
         # xxhash64 must stay JVM-side (no exact Python twin): hash via
         # the Column transform (interpretable — no nested aggregate),
         # fold the hash arrays in numpy.
+        hashes = _shingle_hashes(F.col(text_col), shingle_k, hash_fn)
         @F.pandas_udf(T.ArrayType(T.LongType()))
         def fold(hs: pd.Series) -> pd.Series:
             if len(hs) == 0:
@@ -505,6 +517,7 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
 
     if method != "column":
         raise ValueError(f"unknown minhash fold method: {method!r}")
+    hashes = _shingle_hashes(F.col(text_col), shingle_k, hash_fn)
     A = F.array(*[F.lit(a) for a, _ in coeffs])
     B = F.array(*[F.lit(b) for _, b in coeffs])
     # One fold over the shingle array: the shingle+hash subexpression is
@@ -755,7 +768,12 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
     signature fold runs exactly once; the band explode, the pair
     generation, and the ``min_sig_matches`` gate all derive from the
     cache with trivial per-row work.  In a production 100 TB dedup you
-    would write the signature table once and join from that.
+    would write the signature table once and join from that.  The
+    gated fused path (``strategy="fused"`` with ``min_sig_matches``)
+    ignores ``persist``: its signature projection has a single
+    consumer, so nothing is cached and the result carries no release
+    handle, and each action on the returned pairs re-runs the corpus
+    pass (checkpoint the pairs to reuse them).
 
     ``max_bucket`` drops band buckets holding more than that many
     documents BEFORE any pair is emitted — the standard skew guard: one
@@ -1367,21 +1385,23 @@ def minhash_lsh_stats(df: DataFrame, text_col: str = "text",
     Returns one row: (n_pairs_capped, sum_bands, n_buckets,
     max_bucket_size, n_capped_buckets).
 
-    Physical shape: ONE shuffle of the banded projection (8-byte
-    bucket keys) into per-bucket id lists; sizes, the Σ C(n, 2)
-    arithmetic, and the capped pair generation (a ≤ C(max_bucket, 2)
-    local expansion per bucket, empty for capped buckets) all derive
-    from that single grouped pass.  The grouped pass is
-    ``localCheckpoint``ed and consumed EAGERLY by both output
-    branches (the stats aggregate and the distinct-pair count):
-    Catalyst has no cross-branch CSE, so the earlier lazy
-    crossJoin-of-two-branches form re-ran the signature fold, the
-    band exchange and the bucket aggregation twice per invocation
-    (round-15 plan audit: two ArrowEvalPython + two bucket-key
-    Exchanges in one plan).  The checkpoint is released before
-    returning — the result is a single already-computed profile row,
-    so the operator is eager (like :func:`dedup_clusters`' small-graph
-    path) and leaves no cached blocks behind.
+    Physical shape: one lazy plan and one collect, the histogram
+    fill's partial-agg-then-reduce shape.  ONE shuffle of the banded
+    projection (8-byte bucket keys) groups per-bucket id lists; each
+    bucket row then emits its capped pairs (codegen'd
+    ``posexplode``/``explode`` generators, empty for capped buckets)
+    plus one null-keyed marker row carrying the bucket size.  The
+    distinct-pair aggregate keyed on (id_a, id_b) also folds the
+    bucket statistics over the markers, whose (null, null) group is
+    the only one where they are non-null (partial aggregation
+    collapses it map-side, so it is no skew); a global agg counts the
+    non-null pairs and lifts the statistics.  The signature fold, the
+    band exchange and the bucket aggregation therefore run once with
+    no checkpoint, no second branch and no cross join, and the
+    operator leaves no cached blocks behind.  (``DataFrame.observe``
+    is not a substitute for the folded statistics: on PySpark 4.1 the
+    observed metrics are lost when the branch after the observe point
+    is empty — empty input, all-NULL text, every bucket capped.)
     """
     nparts = _probed_fold_parts(df, text_col)
     sigs = minhash_signatures(df.repartition(nparts), text_col, id_col,
@@ -1391,69 +1411,38 @@ def minhash_lsh_stats(df: DataFrame, text_col: str = "text",
         banded.repartition(nparts, "band", "bucket")
         .groupBy("band", "bucket")
         .agg(F.collect_list(id_col).alias("__ids"))
-        .select(F.size("__ids").alias("__n"), "__ids")
-        # eager: fold + band exchange + bucket agg run ONCE; both
-        # branches below read the checkpointed blocks (see docstring)
-        .localCheckpoint()
     )
-    ckpt = buckets  # release handle (buckets is re-bound below)
-    # Read the checkpointed bucket table at FEWER, larger partitions
-    # (guide §2.2): the agg ran at the fold's byte-derived width, but
-    # its output is at most n_docs x bands tiny rows consumed by two
-    # cheap branch scans — at sf0.1 the 2 x 32 near-empty read tasks
-    # were pure scheduling latency (interleaved A/B: 3.7-6.0 s ->
-    # 2.9-4.2 s per invocation at width 8, identical rows).  Width is
-    # probe-derived (~64k bucket rows per read task, floor 4) so a
-    # big corpus keeps the parallel read and the pair explode's
-    # C(max_bucket,2) blowup stays spread; probe-less (cluster)
-    # sessions keep the full width (zero-eager-jobs contract).
-    from .sizing import scratch_budget
-
-    if scratch_budget(df.sparkSession) is not None:
-        n_all, _s_all, _s_txt, _s_chars = _text_probe(df, text_col)
-        est_bucket_rows = max(int(n_all) * bands, 1)
-        read_width = max(4, min(nparts, -(-est_bucket_rows // 65536)))
-        if read_width < nparts:
-            buckets = buckets.coalesce(read_width)
-    pair_gen = F.filter(
-        F.flatten(
-            F.transform(
-                "__ids",
-                lambda x: F.transform(
-                    "__ids",
-                    lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                ),
-            )
-        ),
-        lambda p: p.id_a < p.id_b,
+    # position i of a bucket pairs with positions i+1.. (slice is
+    # 1-based); the trailing null element is the bucket's marker row
+    pairs = (
+        buckets.select("__ids", F.expr(
+            f"posexplode(concat(if(size(__ids) <= {int(max_bucket)}, "
+            "__ids, array()), array(null)))").alias("__i", "__a"))
+        .select(
+            "__a",
+            F.when(F.col("__a").isNull(), F.size("__ids").cast("long"))
+            .alias("__n"),
+            F.expr("explode(if(__a IS NULL, array(null), "
+                   "slice(__ids, __i + 2, size(__ids))))").alias("__b"))
+        .where(F.col("__a").isNull() | (F.col("__a") != F.col("__b")))
     )
-    # the empty-array fallback must carry the SAME element type as
-    # pair_gen, derived from the actual id column (a string doc id
-    # would fail analysis against a hardcoded long here)
-    id_t = sigs.schema[id_col].dataType.simpleString()
-    buckets = buckets.withColumn(
-        "__pairs",
-        F.when(F.col("__n") <= max_bucket, pair_gen)
-        .otherwise(F.array().cast(f"array<struct<id_a:{id_t},id_b:{id_t}>>")),
+    n = F.col("__n")
+    row = (
+        pairs.groupBy(F.least("__a", "__b").alias("id_a"),
+                      F.greatest("__a", "__b").alias("id_b"))
+        .agg(F.sum(n * (n - 1)).alias("__s"), F.count(n).alias("__c"),
+             F.max(n).alias("__m"),
+             F.sum((n > max_bucket).cast("long")).alias("__k"))
+        .agg(
+            F.count("id_a").alias("n_pairs_capped"),
+            (F.max("__s") / 2).cast("long").alias("sum_bands"),
+            F.coalesce(F.max("__c"), F.lit(0).cast("long"))
+            .alias("n_buckets"),
+            F.max("__m").alias("max_bucket_size"),
+            F.max("__k").alias("n_capped_buckets"),
+        )
+        .collect()[0]
     )
-    bucket_stats = buckets.agg(
-        (F.sum(F.col("__n") * (F.col("__n") - 1)) / 2)
-        .cast("long").alias("sum_bands"),
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.max("__n").cast("long").alias("max_bucket_size"),
-        F.sum((F.col("__n") > max_bucket).cast("long"))
-        .alias("n_capped_buckets"),
-    )
-    n_pairs = (
-        buckets.select(F.explode("__pairs").alias("p"))
-        .select("p.id_a", "p.id_b")
-        .distinct()
-        .agg(F.count(F.lit(1)).alias("n_pairs_capped"))
-    )
-    try:
-        row = n_pairs.crossJoin(F.broadcast(bucket_stats)).collect()[0]
-    finally:
-        _release_local_checkpoint(ckpt)
     from .localrel import local_relation
 
     return local_relation(

@@ -2788,11 +2788,13 @@ def _q_minhash_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     generated ~2.6M pairs in a single task, 9.25 s in BENCH_r04):
     ``sum_bands`` comes from per-bucket arithmetic (Σ C(n_b, 2), no
     join, exact for the FULL uncapped distribution), and only the
-    distinct-pair count runs the self-join, under the production
+    distinct-pair count expands pairs, under the production
     ``max_bucket`` guard, with the capped-away mass reported.
 
-    Nothing persists (the fold is consumed once in the grouped pass),
-    so no cache lifetime to manage here."""
+    The operator runs one plan in one collect (the bucket statistics
+    fold into the distinct-pair aggregate) and returns a one-row
+    local relation; nothing is cached or checkpointed, so there is no
+    cache lifetime to manage here."""
     from .operators import minhash_lsh_stats
 
     return minhash_lsh_stats(_dup_corpus(spark, sf_dir), num_perm=32,

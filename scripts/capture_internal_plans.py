@@ -97,10 +97,10 @@ def main() -> None:
     release_candidates_cache(cands)
     release_candidates_cache(ver)
 
-    # minhash_lsh_stats is fully eager (one fused collect inside the
+    # minhash_lsh_stats is eager (one collect of one plan inside the
     # operator); spy on DataFrame.collect to capture the REAL executed
-    # plan of that collect (closes the round-15 verdict's evidence gap
-    # — the _after.txt file only shows the returned LocalTableScan)
+    # plan of that collect — the _after.txt file only shows the
+    # returned LocalTableScan
     # patch the CLASSIC DataFrame class — pyspark.sql.DataFrame is an
     # ABC in Spark 4 and instances dispatch to the subclass's method
     from pyspark.sql.classic.dataframe import DataFrame as _DF
@@ -126,8 +126,9 @@ def main() -> None:
     finally:
         _DF.collect = _orig_collect
     sections["minhash_lsh_stats"] = [
-        ("fused stats+distinct-pair collect (both branches over the "
-         "checkpointed bucket table)", p) for p in stats_plans
+        ("one collect: bucket exchange -> capped pairs + per-bucket "
+         "marker rows -> distinct-pair agg folding the bucket stats "
+         "-> global agg", p) for p in stats_plans
     ]
 
     emb, emb_tbl, enew = _emb_gate_inputs(spark, sf_dir)

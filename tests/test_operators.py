@@ -84,6 +84,9 @@ def test_minhash_arrow_column_identical(spark, tables):
     the pure-Column HOF fold for BOTH hash functions, including the
     short/empty/non-ASCII text edge cases (uint32 wrap arithmetic and
     the ascii('') == 0 rule are replicated exactly)."""
+    import random
+
+    from dask_histogram_spark.operators.dedup import _FOLD_BLOCK
     from dask_histogram_spark.operators.dedup import minhash_signatures as ms
 
     d = tables["documents"]
@@ -91,15 +94,24 @@ def test_minhash_arrow_column_identical(spark, tables):
         [(100001, ""), (100002, "abc"), (100003, "résumé ünïcode")],
         "doc_id long, text string",
     )
-    corpus = d.select("doc_id", "text").unionByName(edge)
-    for hf in ("fnv1a32", "xxhash64"):
-        arrow = {r.doc_id: list(r.sig)
-                 for r in ms(corpus, num_perm=16, hash_fn=hf,
-                             method="arrow").collect()}
-        column = {r.doc_id: list(r.sig)
-                  for r in ms(corpus, num_perm=16, hash_fn=hf,
-                              method="column").collect()}
-        assert arrow == column
+    # one Arrow batch spanning several fold blocks, with one document
+    # longer than a whole block (blocks split only at doc boundaries)
+    rng = random.Random(5)
+    lens = [9_000] * 6 + [_FOLD_BLOCK + 5_000] + [3_000] * 4
+    blocks = spark.createDataFrame(
+        [(200000 + i, "".join(rng.choices("abcdefghij klmnop", k=n)))
+         for i, n in enumerate(lens)],
+        "doc_id long, text string",
+    ).coalesce(1)
+    for corpus in (d.select("doc_id", "text").unionByName(edge), blocks):
+        for hf in ("fnv1a32", "xxhash64"):
+            arrow = {r.doc_id: list(r.sig)
+                     for r in ms(corpus, num_perm=16, hash_fn=hf,
+                                 method="arrow").collect()}
+            column = {r.doc_id: list(r.sig)
+                      for r in ms(corpus, num_perm=16, hash_fn=hf,
+                                  method="column").collect()}
+            assert arrow == column
 
 
 def test_fnv_batch_kernel_matches_per_doc():
@@ -173,9 +185,11 @@ def test_band_explode_sql_matches_column_form(spark, docs_with_dups):
 def test_minhash_lsh_stats_matches_candidates(spark, docs_with_dups):
     """The single-shuffle stats operator must agree with the join-based
     candidate operator it profiles: n_pairs_capped == the distinct pair
-    count under the same max_bucket cap, and sum_bands == the sum of
-    n_bands over the UNCAPPED candidate set."""
+    count under the same max_bucket cap, sum_bands == the sum of
+    n_bands over the UNCAPPED candidate set, and the bucket statistics
+    match a direct groupBy over the band-bucket membership."""
     from dask_histogram_spark.operators import (
+        minhash_banded,
         minhash_lsh_stats,
         release_candidates_cache,
     )
@@ -188,10 +202,18 @@ def test_minhash_lsh_stats_matches_candidates(spark, docs_with_dups):
     uncapped = minhash_lsh_candidates(df, num_perm=32, bands=8)
     sum_bands = uncapped.agg(F.sum("n_bands")).collect()[0][0]
     release_candidates_cache(uncapped)
+    sizes = (minhash_banded(df, num_perm=32, bands=8)
+             .groupBy("band", "bucket").agg(F.count("doc_id").alias("n"))
+             .agg(F.count(F.lit(1)).alias("n_buckets"),
+                  F.max("n").alias("max_bucket_size"),
+                  F.sum((F.col("n") > 8).cast("long"))
+                  .alias("n_capped_buckets"))
+             .collect()[0])
     assert row.n_pairs_capped == n_capped
     assert row.sum_bands == sum_bands
-    assert row.max_bucket_size >= 2  # every doc duplicated once
-    assert row.n_buckets > 0
+    assert row.n_buckets == sizes.n_buckets
+    assert row.max_bucket_size == sizes.max_bucket_size >= 2
+    assert row.n_capped_buckets == sizes.n_capped_buckets
 
 
 def test_ngram_jaccard_exact_dups_score_one(spark, docs_with_dups):
@@ -2847,8 +2869,9 @@ def test_contamination_near_dup_empty_inputs(spark):
 def test_minhash_lsh_stats_string_ids(spark):
     """minhash_lsh_stats with a STRING id column: the capped-bucket
     empty-array fallback must carry the id column's actual type (a
-    hardcoded long struct fails analysis), and the capped counts match
-    the long-id run on the same texts."""
+    hardcoded long struct fails analysis), and the row matches the
+    long-id run on the same texts.  Also pins the exact row when every
+    bucket is capped and when there is no bucket at all."""
     from dask_histogram_spark.operators import minhash_lsh_stats
 
     texts = [f"doc body number {i % 4} repeated words here" for i in range(24)]
@@ -2857,12 +2880,16 @@ def test_minhash_lsh_stats_string_ids(spark):
     strs = spark.createDataFrame(
         [(f"d{i:04d}", t) for i, t in enumerate(texts)],
         "doc_id string, text string")
-    # max_bucket=2 forces the .otherwise(empty-array) branch to matter
-    rl = minhash_lsh_stats(longs, max_bucket=2).collect()[0]
-    rs = minhash_lsh_stats(strs, max_bucket=2).collect()[0]
-    assert rs.sum_bands == rl.sum_bands
-    assert rs.n_pairs_capped == rl.n_pairs_capped
-    assert rs.n_capped_buckets == rl.n_capped_buckets > 0
+    # max_bucket=2 caps every bucket, so no bucket emits a pair
+    for df in (longs, strs):
+        assert tuple(minhash_lsh_stats(df, max_bucket=2).collect()[0]) == (
+            0, 2508, 39, 24, 39)
+    # no bucket at all: empty input, and text that is entirely NULL
+    nulls = spark.createDataFrame([(i, None) for i in range(5)],
+                                  "doc_id long, text string")
+    for df in (longs.limit(0), nulls):
+        assert tuple(minhash_lsh_stats(df).collect()[0]) == (
+            0, None, 0, None, None)
 
 
 def test_stratified_sample_sql_quoted_group(spark):

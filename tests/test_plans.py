@@ -19,7 +19,6 @@ CARTESIAN_ALLOWED = {
     "embedding_near_dup",   # union's exact half exists for oracle checks only
     "similarity_topk",      # broadcast NLJ: queries side is broadcast-tiny
     "dedup_exact_stats",    # cross join against a broadcast 1-ROW stats agg
-    "minhash_lsh_stats",    # 1-row pair count x 1-row bucket stats assembly
     "text_quality",         # lm_score: broadcast 1-ROW vocabulary-size frame
 }
 
@@ -46,6 +45,37 @@ def test_no_unexpected_cartesian_products(plans):
         if "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan:
             bad.append(name)
     assert not bad, f"unexpected cartesian/NLJ in: {bad}"
+
+
+def test_minhash_lsh_stats_is_one_plan_and_one_collect(spark, monkeypatch):
+    """minhash_lsh_stats is eager, so its returned plan is a
+    LocalRelation and the audit above cannot see its work: spy on
+    DataFrame.collect for the plan that work ran in.  One collect, the
+    signature fold in it once, and no cartesian/NLJ stage."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    def run():
+        return QUERIES["minhash_lsh_stats"](spark, SF_DIR)
+
+    run()  # fills the session's text-probe memo (a collect of its own)
+    collect = ClassicDataFrame.collect
+    plans = []
+
+    def spy(self):
+        out = collect(self)
+        plan = self._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()  # the final plan only
+        plans.append(plan.toString())
+        return out
+
+    monkeypatch.setattr(ClassicDataFrame, "collect", spy)
+    run()
+    monkeypatch.undo()
+    assert len(plans) == 1
+    assert plans[0].count("ArrowEvalPython") == 1, plans[0]
+    assert "CartesianProduct" not in plans[0]
+    assert "BroadcastNestedLoopJoin" not in plans[0]
 
 
 def test_histogram_scans_are_column_pruned(plans):
