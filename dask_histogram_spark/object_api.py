@@ -99,6 +99,7 @@ class Histogram:
                 from pyspark.sql import SparkSession
 
                 from .fill import sparse_schema
+                from .operators.localrel import local_relation
 
                 spark = SparkSession.getActiveSession()
                 if spark is None:
@@ -106,7 +107,7 @@ class Histogram:
                         "computing an empty Histogram needs an active "
                         "SparkSession (none found)"
                     )
-                empty = spark.createDataFrame([], sparse_schema(self.spec))
+                empty = local_relation(spark, [], sparse_schema(self.spec))
                 self._agg = AggHistogram(empty, self.spec)
             else:
                 self._agg = AggHistogram(

@@ -21,9 +21,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .localrel import local_relation
 
 __all__ = [
     "auto_minhash_params",
@@ -1443,8 +1446,6 @@ def minhash_lsh_stats(df: DataFrame, text_col: str = "text",
         )
         .collect()[0]
     )
-    from .localrel import local_relation
-
     return local_relation(
         df.sparkSession, [row],
         ("n_pairs_capped long, sum_bands long, n_buckets long, "
@@ -1592,7 +1593,7 @@ def _jaccard_bincount(df: DataFrame, shingles: Column, id_col: str,
         text_col, k = char_kgram
         tt = df.select(F.col(id_col), F.col(text_col)).toArrow()
         if tt.num_rows == 0:
-            return spark.createDataFrame([], out_schema)
+            return local_relation(spark, [], out_schema)
         ids = tt.column(id_col).to_numpy(zero_copy_only=False)
         # NULL text -> zero shingles (the doc can never pair), matching
         # the Column hash path where transform(null) yields a null
@@ -1619,7 +1620,7 @@ def _jaccard_bincount(df: DataFrame, shingles: Column, id_col: str,
         tbl = (df.select(F.col(id_col), hs.alias("hs"))
                .toArrow().combine_chunks())
         if tbl.num_rows == 0:
-            return spark.createDataFrame([], out_schema)
+            return local_relation(spark, [], out_schema)
         ids = tbl.column(id_col).to_numpy(zero_copy_only=False)
         hs_arr = tbl.column("hs").chunk(0)
         offsets = hs_arr.offsets.to_numpy(
@@ -2254,22 +2255,10 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
             ep.unpersist()
             nodes, lab = _min_label_numpy(pdf["a"].to_numpy(),
                                           pdf["b"].to_numpy())
-            # LocalRelation, not createDataFrame: the caller's collect
-            # of an RDD-backed local result is a defaultParallelism-
-            # task job per materialization; a LocalTableScan collects
-            # driver-side with zero jobs (see operators/localrel.py).
-            # Above the literal-row cap, keep the Arrow pandas vehicle
-            # (the parse would outgrow the job it avoids).
-            from .localrel import _MAX_LITERAL_ROWS, local_relation
-
-            if len(nodes) <= _MAX_LITERAL_ROWS:
-                return local_relation(
-                    pairs.sparkSession,
-                    list(zip(nodes.tolist(), nodes[lab].tolist())),
-                    "doc_id long, cluster_id long")
-            out = pd.DataFrame({"doc_id": nodes, "cluster_id": nodes[lab]})
-            return pairs.sparkSession.createDataFrame(
-                out, schema="doc_id long, cluster_id long")
+            return local_relation(
+                pairs.sparkSession,
+                pa.table({"doc_id": nodes, "cluster_id": nodes[lab]}),
+                "doc_id long, cluster_id long")
         # too big: fall through to the distributed loop; the edge
         # checkpoint below materializes FROM the cache (eager), after
         # which the probe cache is dead weight

@@ -1,144 +1,35 @@
-"""Driver-local DataFrames as true LocalRelations.
+"""Driver-local DataFrames as true LocalRelations, landed through Arrow.
 
-``spark.createDataFrame(rows)`` parallelizes the rows into an
-RDD-backed plan (``Scan ExistingRDD`` over ``defaultParallelism``
-slices).  That costs a cluster job of near-empty tasks every time the
-relation is materialized: a broadcast build over it launches a
-32-task job per join (similarity_ivf_topk paid three per invocation —
-round-16 job trace), and a collect of a locally-landed result pays
-the same job again.  The SAME rows spelled as a ``VALUES`` literal
-parse to a ``LocalRelation``: broadcast relations build driver-side
-with ZERO jobs, and collects never leave the driver.
-
-:func:`local_relation` renders rows to that form for the flat types
-the probe/result relations actually use (integrals, float/double,
-boolean, string, arrays thereof) and falls back to
-``spark.createDataFrame`` for anything it cannot spell exactly
-(structs, maps, decimals, timestamps, non-DDL-default nested
-nullability, oversized payloads) — the fallback is always correct,
-just job-backed.  Schema equality is exact, including per-field
-nullability: nullable fields ride a sentinel all-NULL row (dropped by
-a marker filter the optimizer folds back into the LocalRelation), so
-the analyzer cannot narrow them to non-nullable.  Value fidelity is
-pinned by tests/test_operators.py::test_local_relation_matches_create
-(NaN/±Inf/-0.0/1e±300 doubles, null elements, empty arrays, quotes
-and control characters in strings).
+``spark.createDataFrame(rows)`` over Python rows parallelizes them into
+an RDD-backed plan (``Scan ExistingRDD``): every materialization — a
+collect, a broadcast build — is a cluster job of near-empty tasks.  The
+same data handed over as a ``pyarrow.Table`` plans as a
+``LocalTableScan`` with the exact requested schema (nullability, maps,
+structs, decimals, timestamps included) at any size: broadcast builds
+over it and collects of it run on the driver with zero jobs.  Fidelity
+is pinned by tests/test_operators.py::test_local_relation_matches_create.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 __all__ = ["local_relation"]
 
-# beyond this much rendered SQL the parse itself stops being cheap
-# relative to the parallelize job the literal form avoids
-_MAX_SQL_BYTES = 4 << 20
-# row cap for the literal form: the ANTLR parse + per-cell fold of a
-# VALUES list is driver-side work that grows linearly with rows
-# (~45 µs/row measured), while the job it avoids is ~constant —
-# measured at sf0.1, the 5-7.5k-row dedup_incremental leg landings
-# LOST ~0.5 s/invocation as literals (two concurrent driver-thread
-# parses) while ≤2.5k-row relations win; 4096 keeps the literal form
-# for the relations where it pays
-_MAX_LITERAL_ROWS = 4096
 
-
-def _render_scalar(v, dt) -> str:
-    if v is None:
-        return "NULL"
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return str(int(v))
-    if isinstance(dt, (T.DoubleType, T.FloatType)):
-        f = float(v)
-        if f != f:
-            return "CAST('NaN' AS DOUBLE)"
-        if f == float("inf"):
-            return "CAST('Infinity' AS DOUBLE)"
-        if f == float("-inf"):
-            return "CAST('-Infinity' AS DOUBLE)"
-        # repr round-trips doubles exactly; the D suffix keeps the
-        # literal DOUBLE (a bare decimal would parse as DECIMAL)
-        return f"{f!r}D"
-    if isinstance(dt, T.BooleanType):
-        return "true" if v else "false"
-    if isinstance(dt, T.StringType):
-        s = str(v).replace("\\", "\\\\").replace("'", "\\'")
-        return f"'{s}'"
-    raise ValueError(f"unsupported local-relation type: {dt}")
-
-
-def _render(v, dt) -> str:
-    if isinstance(dt, T.ArrayType):
-        if v is None:
-            return "NULL"
-        if len(v) == 0:
-            # empty array() infers element NULL type; the outer
-            # column CAST fixes it
-            return "array()"
-        return "array(" + ",".join(
-            _render_scalar(e, dt.elementType) for e in v) + ")"
-    return _render_scalar(v, dt)
-
-
-def _ddl_exact(dt) -> bool:
-    """True when CAST-to-``dt.simpleString()`` reproduces ``dt``
-    exactly (guards non-default nested nullability like
-    ``ArrayType(..., containsNull=False)``, which DDL cannot spell)."""
-    try:
-        return T.DataType.fromDDL(dt.simpleString()) == dt
-    except Exception:
-        return False
-
-
-def local_relation(spark, rows, schema) -> DataFrame:
-    """``rows`` (sequence of Rows/tuples) + ``schema`` (StructType or
-    DDL string) as a LocalRelation-backed DataFrame, or the plain
-    ``spark.createDataFrame`` fallback when the rows cannot be spelled
-    as an exact VALUES literal.  Values and schema (incl. nullability)
-    are identical either way; only the physical vehicle differs
-    (LocalTableScan vs Scan ExistingRDD)."""
+def local_relation(spark, data, schema) -> DataFrame:
+    """``data`` (a ``pyarrow.Table`` or a sequence of Rows/tuples) with
+    ``schema`` (StructType or DDL string) as a LocalTableScan-backed
+    DataFrame."""
     if isinstance(schema, str):
-        try:
-            schema = T.StructType.fromDDL(schema)
-        except Exception:
-            return spark.createDataFrame(rows, schema)
-    if (not isinstance(schema, T.StructType) or not len(rows)
-            or len(rows) > _MAX_LITERAL_ROWS):
-        return spark.createDataFrame(rows, schema)
-    fields = schema.fields
-    try:
-        if not all(_ddl_exact(f.dataType) for f in fields):
-            raise ValueError("non-DDL-exact field type")
-        body = [
-            "(" + ",".join(
-                [_render(row[i], f.dataType)
-                 for i, f in enumerate(fields)] + ["true"]) + ")"
-            for row in rows
-        ]
-        # sentinel row: NULL in every nullable column (keeps the
-        # analyzed schema nullable, matching createDataFrame), the
-        # first row's value in non-nullable ones; marker=false drops
-        # it before the data is visible, and the optimizer folds the
-        # filter back into the LocalRelation
-        sentinel = [
-            "NULL" if f.nullable else _render(rows[0][i], f.dataType)
-            for i, f in enumerate(fields)
-        ]
-        body.append("(" + ",".join(sentinel + ["false"]) + ")")
-        casts = ",".join(
-            f"CAST(col{i + 1} AS {f.dataType.simpleString()}) "
-            f"AS `{f.name}`"
-            for i, f in enumerate(fields))
-        marker = f"col{len(fields) + 1}"
-        sql = (f"SELECT {casts} FROM VALUES {','.join(body)} "
-               f"WHERE {marker}")
-        if len(sql) > _MAX_SQL_BYTES:
-            return spark.createDataFrame(rows, schema)
-        out = spark.sql(sql)
-        if out.schema != schema:  # pragma: no cover - belt and braces
-            return spark.createDataFrame(rows, schema)
-        return out
-    except ValueError:
-        return spark.createDataFrame(rows, schema)
+        schema = T.StructType.fromDDL(schema)
+    if not isinstance(data, pa.Table):
+        arrow = to_arrow_schema(schema)
+        cols = list(zip(*data)) or [()] * len(arrow)
+        data = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+            schema=arrow)
+    return spark.createDataFrame(data, schema)

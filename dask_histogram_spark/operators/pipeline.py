@@ -1155,9 +1155,6 @@ def contamination_near_dup(train: DataFrame, benchmark: DataFrame,
         ("contam_bband", int(num_perm), int(bands), int(shingle_k),
          int(seed), hash_fn, max_bench_bucket, text_col, id_col),
         bband.collect)
-    # LocalRelation, not createDataFrame: the broadcast build over an
-    # RDD-backed local relation is a defaultParallelism-task job per
-    # tier; over a LocalTableScan it builds driver-side with no job
     from .localrel import local_relation
 
     bband = local_relation(train.sparkSession, rows, bband.schema)

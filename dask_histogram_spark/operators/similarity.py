@@ -546,11 +546,6 @@ def _memoized_probe_rows(queries: DataFrame, q_assigned: DataFrame,
          centroids.shape, hash(centroids.tobytes())),
         q_assigned.collect)
     spark = queries.sparkSession
-    # LocalRelation, not createDataFrame: the probe side is broadcast
-    # into every scored leg, and a broadcast over an RDD-backed local
-    # DataFrame is a defaultParallelism-task job PER LEG (three per
-    # similarity_ivf_topk invocation — round-16 job trace); over a
-    # LocalRelation it builds driver-side with zero jobs
     return q_rows, local_relation(spark, q_rows, q_assigned.schema)
 
 
@@ -780,8 +775,8 @@ def ivf_topk_indexed(path: str, queries: DataFrame,
 
 
 def _empty_pairs(df: DataFrame, id_col: str) -> DataFrame:
-    return df.sparkSession.createDataFrame(
-        [], T.StructType([
+    return local_relation(
+        df.sparkSession, [], T.StructType([
             T.StructField("id_a", df.schema[id_col].dataType),
             T.StructField("id_b", df.schema[id_col].dataType),
             T.StructField("cos_sim", T.DoubleType()),

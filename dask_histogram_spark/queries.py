@@ -86,21 +86,13 @@ def get_tables(spark: SparkSession, sf_dir: str) -> dict:
 # ---------------------------------------------------------------------------
 
 def _land_local(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Land a batch-bounded DataFrame locally via one Arrow collect and
-    rebuild it as a true LocalRelation (operators/localrel.py): every
-    later materialization — the bench collect, a broadcast build —
-    is then driver-side instead of a defaultParallelism-task job over
-    a parallelized RDD.  Rows past localrel._MAX_LITERAL_ROWS keep the
-    round-15 Arrow createDataFrame vehicle (the literal's render+parse
-    would outgrow the job it avoids — measured LOSING ~0.5 s at the
-    5-7.5k-row dedup_incremental landings)."""
-    from .operators.localrel import _MAX_LITERAL_ROWS, local_relation
+    """Land a batch-bounded DataFrame on the driver with one Arrow
+    collect and re-enter it as a LocalTableScan (operators/localrel.py):
+    every later materialization — the bench collect, a broadcast build
+    — then runs driver-side with zero jobs, at any row count."""
+    from .operators.localrel import local_relation
 
-    tbl = df.toArrow()
-    if tbl.num_rows > _MAX_LITERAL_ROWS:
-        return spark.createDataFrame(tbl)
-    rows = list(zip(*[c.to_pylist() for c in tbl.columns]))
-    return local_relation(spark, rows, df.schema)
+    return local_relation(spark, df.toArrow(), df.schema)
 
 
 def clear_bench_memos() -> None:

@@ -451,20 +451,19 @@ class AggHistogram:
                     f"operand array shape {arr.shape} != histogram shape "
                     f"{tuple(ax.nbins for ax in spec.axes)}"
                 )
-            spark = self.df.sparkSession
-            rows = [
-                tuple(int(i) for i in idx) + (float(arr[idx]),)
-                for idx in np.ndindex(arr.shape)
-            ]
+            import pyarrow as pa
+
+            from .operators.localrel import local_relation
+
+            # bin indices and operand values, both in C order
+            idx = np.indices(arr.shape).reshape(arr.ndim, -1)
+            table = pa.table(dict(zip(bins, idx), __operand=arr.ravel()))
             schema = T.StructType(
                 [T.StructField(c, T.LongType()) for c in bins]
                 + [T.StructField("__operand", T.DoubleType())]
             )
-            # LocalRelation (zero-job broadcast build) — falls back to
-            # createDataFrame for shapes it cannot spell exactly
-            from .operators.localrel import local_relation
-
-            lit_df = F.broadcast(local_relation(spark, rows, schema))
+            lit_df = F.broadcast(
+                local_relation(self.df.sparkSession, table, schema))
             joined = self.df.join(lit_df, on=bins, how="left")
             sel = [F.col(c) for c in bins]
             rhs = F.col("__operand")

@@ -3411,18 +3411,34 @@ def test_lm_score_hashed_model_matches_strings(spark):
 
 
 def test_local_relation_matches_create(spark):
-    """local_relation (the VALUES-literal LocalRelation used for the
+    """local_relation (the Arrow-landed LocalRelation used for the
     broadcast-probe and locally-landed relations) must reproduce
     spark.createDataFrame exactly: same schema, same values — including
     NaN/±Inf/-0.0/1e±300 doubles, null elements/arrays, empty arrays,
-    and quotes/backslashes/newlines in strings — and its physical plan
-    must actually BE a LocalTableScan (the whole point: zero-job
-    broadcast builds and driver-local collects)."""
+    quotes/backslashes/newlines in strings, maps, structs, decimals and
+    timestamps — and its physical plan must actually BE a
+    LocalTableScan at every size (the whole point: zero-job broadcast
+    builds and driver-local collects)."""
+    import datetime
+    import decimal
     import math
 
+    import pyarrow as pa
     from pyspark.sql import types as T
 
     from dask_histogram_spark.operators.localrel import local_relation
+
+    def local_scan(df):
+        return "LocalTableScan" in \
+            df._jdf.queryExecution().executedPlan().toString()
+
+    def collect_jobs(df):
+        # new job IDs, not a count delta: the tracker keeps a bounded
+        # window of jobs, so a count can stay flat while a job runs
+        tracker = spark.sparkContext.statusTracker()
+        before = set(tracker.getJobIdsForGroup(None))
+        rows = df.collect()
+        return rows, len(set(tracker.getJobIdsForGroup(None)) - before)
 
     schema = T.StructType([
         T.StructField("i", T.LongType()),
@@ -3431,18 +3447,29 @@ def test_local_relation_matches_create(spark):
         T.StructField("d", T.DoubleType()),
         T.StructField("v", T.ArrayType(T.DoubleType())),
         T.StructField("w", T.ArrayType(T.IntegerType())),
+        T.StructField("st", T.StructType([
+            T.StructField("x", T.IntegerType()),
+            T.StructField("y", T.StringType())])),
+        T.StructField("dec", T.DecimalType(12, 3)),
+        T.StructField("ts", T.TimestampType()),
     ])
+    ts = datetime.datetime(2021, 3, 4, 5, 6, 7, 123456)
     rows = [
-        (1, "plain", True, 1.5, [1.0, -0.0, 1e300], [1, 2]),
-        (2, "qu'ote\\back\nline", False, float("nan"), [None, 2.5], []),
-        (3, None, None, float("inf"), None, [None]),
-        (-4, "", True, float("-inf"), [1e-300], None),
-        (5, "x", False, -0.0, [float("nan"), float("inf")], [0]),
+        (1, "plain", True, 1.5, [1.0, -0.0, 1e300], [1, 2], (1, "a"),
+         decimal.Decimal("123456789.125"), ts),
+        (2, "qu'ote\\back\nline", False, float("nan"), [None, 2.5], [],
+         (None, None), decimal.Decimal("-0.001"), None),
+        (3, None, None, float("inf"), None, [None], None, None,
+         datetime.datetime(1970, 1, 1)),
+        (-4, "", True, float("-inf"), [1e-300], None, (-4, ""),
+         decimal.Decimal("0.000"), ts),
+        (5, "x", False, -0.0, [float("nan"), float("inf")], [0],
+         (5, "x"), None, None),
     ]
     lr = local_relation(spark, rows, schema)
     cr = spark.createDataFrame(rows, schema)
-    assert "LocalTableScan" in lr._jdf.queryExecution().executedPlan().toString()
-    assert lr.schema == cr.schema
+    assert local_scan(lr)
+    assert lr.schema == cr.schema == schema
 
     def norm(df):
         out = []
@@ -3469,20 +3496,38 @@ def test_local_relation_matches_create(spark):
     nn = T.StructType([T.StructField("k", T.LongType(), False),
                        T.StructField("s", T.StringType(), True)])
     lr2 = local_relation(spark, [(1, "a"), (2, None)], nn)
-    assert lr2.schema == spark.createDataFrame([(1, "a"), (2, None)],
-                                               nn).schema
-    assert "LocalTableScan" in lr2._jdf.queryExecution() \
-        .executedPlan().toString()
-    # unsupported shapes fall back to createDataFrame (still correct):
-    # maps, and nested nullability DDL cannot spell
+    assert lr2.schema == nn
+    assert local_scan(lr2)
+    # maps and containsNull=False arrays land as exact-schema scans too
     st = T.StructType([T.StructField(
         "m", T.MapType(T.StringType(), T.LongType()))])
-    fb = local_relation(spark, [({"a": 1},)], st)
-    assert fb.collect()[0]["m"] == {"a": 1}
+    m = local_relation(spark, [({"a": 1},), (None,)], st)
+    assert m.schema == st and local_scan(m)
+    assert [r["m"] for r in m.collect()] == [{"a": 1}, None]
     nc = T.StructType([T.StructField(
         "v", T.ArrayType(T.DoubleType(), containsNull=False))])
-    fb2 = local_relation(spark, [([1.0],)], nc)
-    assert fb2.schema == nc and fb2.collect()[0]["v"] == [1.0]
+    c = local_relation(spark, [([1.0],)], nc)
+    assert c.schema == nc and local_scan(c)
+    assert c.collect()[0]["v"] == [1.0]
+    # empty input, from rows and from a DDL schema
+    e = local_relation(spark, [], schema)
+    assert e.schema == schema and local_scan(e) and e.collect() == []
+    e2 = local_relation(spark, [], "a long, b string")
+    assert e2.columns == ["a", "b"] and local_scan(e2)
+    # a pyarrow.Table is taken as is and cast to the schema
+    tbl = pa.table({"k": pa.array([3, 4], pa.int32()), "s": ["p", None]})
+    t = local_relation(spark, tbl, nn)
+    assert t.schema == nn and local_scan(t)
+    assert [tuple(r) for r in t.collect()] == [(3, "p"), (4, None)]
+    # one row and 7,500 rows (above the old 4096-row literal cap) both
+    # plan as LocalTableScans and collect without starting a job
+    one = local_relation(spark, [(7, "z")], nn)
+    big = local_relation(spark, [(i, str(i)) for i in range(7500)], nn)
+    assert local_scan(one) and local_scan(big)
+    got, jobs = collect_jobs(one)
+    assert [tuple(r) for r in got] == [(7, "z")] and jobs == 0
+    got, jobs = collect_jobs(big)
+    assert len(got) == 7500 and got[-1]["s"] == "7499" and jobs == 0
 
 
 def test_single_pass_gated_candidates_match_semijoin(spark, tables):
