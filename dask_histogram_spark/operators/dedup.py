@@ -694,24 +694,21 @@ def _probed_fold_parts(df: DataFrame, text_col: str) -> int:
 
 
 def _text_band_preflight(df: DataFrame, text_col: str, num_perm: int,
-                         bands: int, hash_fn: str, *, join_sides: int,
-                         carry_sig: bool, sig_gate: bool, what: str,
-                         remedies: tuple[str, ...]) -> None:
+                         bands: int, hash_fn: str, *, carry_sig: bool,
+                         what: str, remedies: tuple[str, ...]) -> None:
     """Scratch-volume preflight for the text-side band shuffles
     (round-12 VERDICT: the embedding twins got this guard first) —
     model the deterministic exchanges from one probe agg (row count,
     non-null-text count, total text bytes) and raise the sizing
     module's actionable error BEFORE launching a shuffle the local
     scratch volume cannot hold.  Modeled: the pre-fold repartition
-    (every row's text crosses once), ``join_sides`` x the band-row
-    exchange (n_docs x bands rows; x2 for a self-join's two aliased
-    sides, x1 for the fused single-shuffle plan and the bucketed
-    write), and the ``min_sig_matches`` gate's two signature
-    shipments.  NOT modeled (data-dependent): the candidate-pair
-    exchange, whose blowup ``max_bucket`` bounds — the remedies name
-    it.  Callers only invoke this when the scratch budget is known
-    (local mode), preserving the zero-eager-jobs laziness contract on
-    clusters.
+    (every row's text crosses once) and the one band-row exchange
+    (n_docs x bands rows, each carrying the num_perm x 8 B signature
+    when ``carry_sig``).  NOT modeled (data-dependent): the
+    candidate-pair exchange, whose blowup ``max_bucket`` bounds — the
+    remedies name it.  Callers only invoke this when the scratch
+    budget is known (local mode), preserving the zero-eager-jobs
+    laziness contract on clusters.
 
     Probe cost is sized for the guard's OWN target scale: ONE job in
     ONE pass over the (possibly derived, uncached) input computes the
@@ -744,9 +741,7 @@ def _text_band_preflight(df: DataFrame, text_col: str, num_perm: int,
     band_row = ((8 * num_perm if carry_sig else 0) + bucket_bytes
                 + 12 + _TEXT_ROW_OVERHEAD_BYTES)
     est = chars + n_all * _TEXT_ROW_OVERHEAD_BYTES  # pre-fold spread
-    est += join_sides * n_txt * bands * band_row
-    if sig_gate:
-        est += 2 * n_txt * (8 * num_perm + _TEXT_ROW_OVERHEAD_BYTES)
+    est += n_txt * bands * band_row
     check_shuffle_scratch(df.sparkSession, est, what=what,
                           remedies=remedies)
 
@@ -754,83 +749,52 @@ def _text_band_preflight(df: DataFrame, text_col: str, num_perm: int,
 def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
                            id_col: str = "doc_id", num_perm: int = 64,
                            bands: int = 16, shingle_k: int = 5,
-                           seed: int = 17, persist: bool = True,
-                           hash_fn: str = "xxhash64",
+                           seed: int = 17, hash_fn: str = "xxhash64",
                            max_bucket: int | None = None,
-                           min_sig_matches: int | None = None,
-                           strategy: str = "auto") -> DataFrame:
+                           min_sig_matches: int | None = None) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b, n_bands matched).
 
     Banding: signature split into ``bands`` rows of r = num_perm/bands;
-    docs sharing any band bucket become candidates.  The only shuffle is
-    keyed on (band, band_hash) — no cross join anywhere, so the
-    plan scales with bucket sizes, not n^2.
-
-    ``persist`` materializes the SIGNATURE projection (id + num_perm
-    longs — a few hundred bytes per document) so the expensive
-    signature fold runs exactly once; the band explode, the pair
-    generation, and the ``min_sig_matches`` gate all derive from the
-    cache with trivial per-row work.  In a production 100 TB dedup you
-    would write the signature table once and join from that.  The
-    gated fused path (``strategy="fused"`` with ``min_sig_matches``)
-    ignores ``persist``: its signature projection has a single
-    consumer, so nothing is cached and the result carries no release
-    handle, and each action on the returned pairs re-runs the corpus
-    pass (checkpoint the pairs to reuse them).
+    docs sharing any band bucket become candidates.  One lazy plan and
+    one corpus pass, with no join: after the pre-fold spread, the band
+    rows shuffle once on (band, bucket), a window count sizes each
+    bucket, the surviving buckets collect into sorted member arrays,
+    and the C(b, 2) combinations of a b-doc bucket explode narrowly
+    from its array into the pair-key aggregate (n_bands = buckets
+    shared), which is the one exchange after the band shuffle.  No
+    Spark job runs before the caller's action (apart from the local
+    scratch preflight's memoized probe), and nothing is cached: each
+    action on the returned pairs re-runs the corpus pass, so
+    checkpoint the pairs to consume them more than once.
 
     ``max_bucket`` drops band buckets holding more than that many
-    documents BEFORE any pair is emitted — the standard skew guard: one
-    degenerate bucket of b docs emits b^2 pairs (a 100k-doc bucket is
-    10^10 pairs in one key), and mega-buckets on a template-heavy
-    corpus are boilerplate clusters exact dedup already catches; pairs
-    that ALSO share a small (= discriminative) bucket survive.
-
-    ``strategy`` picks the pair-generation plan:
-
-    - ``"fused"`` (the ``"auto"`` default when ``max_bucket`` is set):
-      ONE shuffle groups band rows into per-bucket id arrays
-      (``collect_list``), the cap filters on ``size(ids)``, and the
-      C(n,2) combinations explode narrowly from each surviving array —
-      no per-bucket count pre-pass, no semi-join, no self-join.  Pair
-      blowup is bounded at C(max_bucket, 2) per bucket row.  The
-      transient cost is materializing a to-be-dropped mega-bucket as
-      one array before the size filter (8 bytes/doc — a pathological
-      10M-doc bucket is an 80 MB row), which is why this path requires
-      a cap.  Measured at sf0.1: 1.7 s vs 4.4 s for the semi-join plan.
-    - ``"semijoin"`` (the ``"auto"`` default when uncapped): per-bucket
-      count + left-semi prefilter (when capped) feeding a band-bucket
-      equi-self-join.  Never materializes a bucket membership list, so
-      it is the safe plan for adversarial corpora or uncapped runs.
+    documents BEFORE any member array materializes or any pair is
+    emitted — the standard skew guard: a degenerate bucket of b docs
+    emits C(b, 2) pairs (a 100k-doc bucket is 5 x 10^9 pairs in one
+    key), and mega-buckets on a template-heavy corpus are boilerplate
+    clusters exact dedup already catches; pairs that ALSO share a
+    small (= discriminative) bucket survive.  With a cap, each member
+    array holds at most ``max_bucket`` entries.  Uncapped (``None``),
+    every bucket of two or more docs is kept and collected whole, so
+    one mega-bucket is one b-entry array emitting C(b, 2) pairs —
+    quadratic, as a band self-join would be.  Set ``max_bucket`` on
+    any corpus that may contain one.
 
     ``min_sig_matches`` requires at least that many of the num_perm
     signature components to agree — the two-tier verification gate:
     component agreement is the unbiased MinHash estimate of shingle
     jaccard, costs one num_perm-long zip per pair (vs shipping full
     shingle sets to an exact verifier), and is exactly reproducible in
-    SQL.  The surviving pairs carry a ``sig_matches`` column.
-
-    Gated + ``"fused"`` together take a SINGLE-PASS plan (round 16):
-    the signature is denormalized into each band row (the
-    write_signature_table trade), the skew cap filters via a window
-    count before any bucket array materializes, and the agreement
-    gate runs inside the combination explode — one corpus pass, two
-    exchanges, no signature cache, no gate joins (``persist`` is
-    irrelevant there: nothing needs caching, no release handle is
-    attached).  Identical pairs/columns to the two-pass form
-    (differentially tested).
-
-    Cache lifetime: the persisted projection stays cached until
-    released — repeated calls in a long-lived session would otherwise
-    accumulate cached blocks.  The handle travels on the returned
-    DataFrame as ``_dhs_persisted``; call
-    :func:`release_candidates_cache` (or ``.unpersist()`` on the
-    handle) once the candidate pairs are materialized.
+    SQL.  The signature then rides each band row (the
+    write_signature_table trade: the band exchange carries bands x
+    num_perm x 8 B per doc) so the gate runs inside the combination
+    explode, before the pair-key exchange; the surviving pairs carry a
+    ``sig_matches`` column.  Ungated, band rows carry only the id.
 
     Examples
     --------
     >>> from dask_histogram_spark.session import get_spark
-    >>> from dask_histogram_spark.operators import (
-    ...     minhash_lsh_candidates, release_candidates_cache)
+    >>> from dask_histogram_spark.operators import minhash_lsh_candidates
     >>> spark = get_spark("doctest", cpus=2)
     >>> docs = spark.createDataFrame(
     ...     [(1, "the quick brown fox jumps over the lazy dog"),
@@ -840,47 +804,29 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
     >>> cands = minhash_lsh_candidates(docs, num_perm=16, bands=4)
     >>> sorted((r.id_a, r.id_b, r.n_bands) for r in cands.collect())
     [(1, 2, 4)]
-    >>> release_candidates_cache(cands)
     """
-    # Resolve and validate the strategy BEFORE any eager work: an
-    # invalid call must raise its ValueError without first running
-    # probe jobs (or a misleading scratch refusal) — round-13 review.
-    if strategy == "auto":
-        strategy = "fused" if max_bucket is not None else "semijoin"
-    if strategy not in ("fused", "semijoin"):
-        raise ValueError(f"unknown candidate strategy: {strategy!r}")
-    if strategy == "fused" and max_bucket is None:
-        raise ValueError(
-            "strategy='fused' requires max_bucket (an uncapped bucket "
-            "would collect unboundedly — use strategy='semijoin')")
+    from pyspark.sql import Window
+
+    from .sizing import scratch_budget
+
+    gated = min_sig_matches is not None
     # Scratch preflight BEFORE any shuffle launches (the text twin of
     # embedding_near_dup_pairs' guard): at 1-10 B docs the band
     # exchange is multi-TB and a volume it cannot fit kills the job at
-    # 97% disk mid-join — fail fast with the levers instead.  Only
+    # 97% disk mid-shuffle — fail fast with the levers instead.  Only
     # when the budget is KNOWN (local mode): on a cluster the plan
-    # stays lazy with zero eager jobs, exactly as before the guard.
-    from .sizing import scratch_budget
-
-    single_pass = strategy == "fused" and min_sig_matches is not None
+    # stays lazy with zero eager jobs.
     if scratch_budget(df.sparkSession) is not None:
         _text_band_preflight(
-            df, text_col, num_perm, bands, hash_fn,
-            join_sides=1 if strategy == "fused" else 2,
-            # the single-pass gated plan denormalizes the signature
-            # into the band rows (write_signature_table's trade)
-            # instead of shipping it twice through the gate joins
-            carry_sig=single_pass,
-            sig_gate=min_sig_matches is not None and not single_pass,
+            df, text_col, num_perm, bands, hash_fn, carry_sig=gated,
             what=(f"minhash_lsh_candidates' band shuffle "
-                  f"(num_perm={num_perm}, bands={bands}, "
-                  f"strategy={strategy!r})"),
+                  f"(num_perm={num_perm}, bands={bands})"),
             remedies=(
                 "reduce bands= (fewer band rows per document at the "
                 "same num_perm trades recall for exchange bytes — see "
                 "auto_minhash_params)",
                 "set max_bucket= (bounds the data-dependent "
-                "candidate-pair exchange this estimate cannot see, "
-                "and enables the one-shuffle fused plan)",
+                "candidate-pair exchange this estimate cannot see)",
                 "build the persisted signature table instead "
                 "(write_signature_table + dedup_incremental_lsh) so "
                 "the corpus shuffles once at build time and only each "
@@ -899,180 +845,66 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
     nparts = _probed_fold_parts(df, text_col)
     sigs = minhash_signatures(df.repartition(nparts), text_col, id_col,
                               num_perm, shingle_k, seed, hash_fn)
-    if single_pass:
-        # SINGLE-PASS gated fused plan (round-16): the signature rides
-        # each band row (write_signature_table's denormalization) so
-        # the agreement gate runs inside the bucket explode — the
-        # signature projection then has exactly ONE consumer, which
-        # removes the whole persist+count barrier AND both gate joins
-        # (their broadcast builds were one cluster job each per
-        # invocation).  The skew cap moves BEFORE the bucket arrays
-        # materialize: a window count over the same (band, bucket)
-        # exchange filters over-cap buckets row-wise, so the transient
-        # per-bucket array is bounded at max_bucket x (8 + 8*num_perm)
-        # bytes even for a pathological mega-bucket (the old
-        # filter-after-collect_list form would have materialized the
-        # whole mega-bucket's signatures in one aggregation buffer).
-        # The gate also fires BEFORE the pair-key exchange, so only
-        # gate-passing co-occurrences cross the wire (§2.3).  Trade:
-        # the band exchange carries bands x num_perm x 8 B per doc vs
-        # the old path's cached-projection reads + two 8 B/component
-        # gate shipments — measured at sf0.1 AND the 1M-doc blowup
-        # (flat-or-better both) — in exchange for dropping a
-        # corpus-sized MEMORY_AND_DISK cache from the operator.
-        from pyspark.sql import Window
+    banded = _band_explode(sigs, id_col, num_perm, bands, hash_fn,
+                           keep=("sig",) if gated else ())
+    # The skew cap filters row-wise on a window count over the
+    # (band, bucket) exchange, BEFORE the member arrays materialize,
+    # so a capped array holds at most max_bucket entries even for a
+    # pathological mega-bucket.  Explicit hash repartition ON the
+    # grouping key: the window and the agg reuse this exchange, and
+    # AQE never coalesces a user-specified repartition, so the
+    # combination explode (up to C(b, 2) rows per bucket) runs at
+    # nparts in the agg's own reduce stage.
+    n = F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
+    keep_bucket = (F.col("__n") >= 2 if max_bucket is None
+                   else F.col("__n").between(2, max_bucket))
+    member = [F.col(id_col).alias("i")]
+    if gated:
+        member.append(F.col("sig").alias("s"))
+    members = (
+        banded.repartition(nparts, "band", "bucket")
+        .withColumn("__n", n)
+        .where(keep_bucket)
+        .groupBy("band", "bucket")
+        .agg(F.array_sort(F.collect_list(F.struct(*member))).alias("__m"))
+    )
 
-        banded = _band_explode(sigs, id_col, num_perm, bands, hash_fn,
-                               keep=("sig",))
-        w = Window.partitionBy("band", "bucket")
-        capped = (
-            banded.repartition(nparts, "band", "bucket")
-            .withColumn("__n", F.count(F.lit(1)).over(w))
-            .where(F.col("__n").between(2, max_bucket))
-        )
-        members = capped.groupBy("band", "bucket").agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col(id_col).alias("i"),
-                                        F.col("sig").alias("s")))
-            ).alias("__m"))
-        combos = F.flatten(F.transform(
-            F.sequence(F.lit(0), F.size("__m") - 2),
-            lambda i: F.transform(
-                F.slice(F.col("__m"), i + 2, F.size("__m")),
-                lambda y: F.struct(
-                    F.col("__m")[i]["i"].alias("id_a"),
-                    y["i"].alias("id_b"),
-                    _sig_agreement(F.col("__m")[i]["s"], y["s"])
-                    .alias("sm"),
-                ),
-            ),
-        ))
-        return (
-            members.select(F.explode(combos).alias("__p"))
-            # strict <: drops (x, x) self-pairs from duplicated ids,
-            # same as the two-pass fused form; the agreement gate is
-            # pair-constant, so filtering per co-occurrence keeps
-            # exactly the pairs (and n_bands counts) the former
-            # post-aggregation gate joins kept
-            .where((F.col("__p.id_a") < F.col("__p.id_b"))
-                   & (F.col("__p.sm") >= min_sig_matches))
-            .groupBy(F.col("__p.id_a").alias("id_a"),
-                     F.col("__p.id_b").alias("id_b"))
-            .agg(F.count(F.lit(1)).alias("n_bands"),
-                 F.max("__p.sm").alias("sig_matches"))
-        )
-    if persist:
-        from pyspark import StorageLevel
+    def pair(a, b):
+        fields = [a["i"].alias("id_a"), b["i"].alias("id_b")]
+        if gated:
+            fields.append(_sig_agreement(a["s"], b["s"]).alias("sm"))
+        return F.struct(*fields)
 
-        sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
-        # materialize NOW: the downstream plan reads the projection from
-        # up to five sibling stages (two self-join sides, bucket count,
-        # two sig-gate sides) that the scheduler runs concurrently — a
-        # lazy cache would let each of them recompute the fold before
-        # any blocks land (measured 26 s vs 14 s at sf0.1).  This is
-        # the query-local analog of writing the signature table once.
-        sigs.count()
-    banded = _band_explode(sigs, id_col, num_perm, bands, hash_fn)
-    # strategy resolved/validated up top, before the eager preflight
-    if strategy == "fused":
-        # ONE shuffle: bucket membership arrays, capped by size, then a
-        # narrow C(n,2) combination explode (<= C(max_bucket, 2) pairs
-        # per bucket row).  Buckets of one doc emit nothing and are
-        # dropped by the same size filter.
-        # Explicit hash repartition ON the groupBy key: the agg reuses
-        # this exchange (same clustering), and AQE never coalesces a
-        # user-specified repartition — so the combination explode below
-        # (an up-to-C(max_bucket,2)x narrow blowup) runs at nparts in
-        # the agg's own reduce stage instead of needing a second
-        # round-robin exchange after the size filter (round-15: one
-        # exchange + one AQE stage fewer, same width; the old
-        # post-filter repartition read 1.3 s vs 1.1 s here at sf0.1).
-        buckets = (
-            banded.repartition(nparts, "band", "bucket")
-            .groupBy("band", "bucket")
-            .agg(F.array_sort(F.collect_list(id_col)).alias("__ids"))
-            .where(F.size("__ids").between(2, max_bucket))
-        )
-        combos = F.flatten(F.transform(
-            F.sequence(F.lit(0), F.size("__ids") - 2),
-            lambda i: F.transform(
-                F.slice(F.col("__ids"), i + 2, F.size("__ids")),
-                lambda idb: F.struct(F.col("__ids")[i].alias("id_a"),
-                                     idb.alias("id_b")),
-            ),
-        ))
-        pairs = (
-            buckets.select(F.explode(combos).alias("__p"))
-            # strict <: a doc_id occurring twice in the input would
-            # otherwise emit an (x, x) self-pair the semijoin
-            # strategy's a.id < b.id predicate never produces
-            .where(F.col("__p.id_a") < F.col("__p.id_b"))
-            .groupBy(F.col("__p.id_a").alias("id_a"),
-                     F.col("__p.id_b").alias("id_b"))
-            .agg(F.count(F.lit(1)).alias("n_bands"))
-        )
-    elif strategy == "semijoin":
-        # Explicit partition count on the join key: the banded
-        # projection's shuffle INPUT is tiny (bands rows/doc of 8-byte
-        # keys) so AQE would coalesce it to ~1 task, but on a
-        # duplicate-heavy corpus the join OUTPUT is sum over buckets of
-        # |bucket|^2 — the explicit count keeps the blowup parallel
-        # (same fix as _jaccard_index_join; measured 1 task vs 64 at
-        # sf0.1).
-        banded = banded.repartition(nparts, "band", "bucket")
-        capped = banded
-        if max_bucket is not None:
-            small = (
-                banded.groupBy("band", "bucket")
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .where(F.col("__n") <= max_bucket)
-                .drop("__n")
-            )
-            capped = banded.join(small, ["band", "bucket"], "left_semi")
-        a = capped.alias("a")
-        b = capped.alias("b")
-        pairs = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .groupBy(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .agg(F.count(F.lit(1)).alias("n_bands"))
-        )
-    else:  # pragma: no cover - validated up top
-        raise AssertionError(f"unreachable strategy: {strategy!r}")
-    if min_sig_matches is not None:
-        # ONE shared (id, sig) relation for both gate joins instead of
-        # two differently-aliased projections: the two build sides are
-        # then canonically identical, so the second join reuses the
-        # first's broadcast/shuffle exchange (ReusedExchange) instead
-        # of re-scanning the signature cache and building a second
-        # hash relation per invocation (round-16 plan audit: two
-        # BroadcastQueryStages, no reuse).
-        s_rel = sigs.select(F.col(id_col).alias("__gid"),
-                            F.col("sig").alias("__gsig"))
-        p1 = (pairs.join(s_rel, F.col("id_a") == F.col("__gid"))
-              .withColumnRenamed("__gsig", "__sa").drop("__gid"))
-        pairs = (
-            p1.join(s_rel, F.col("id_b") == s_rel["__gid"])
-            .withColumn("sig_matches", _sig_agreement("__sa", "__gsig"))
-            .where(F.col("sig_matches") >= min_sig_matches)
-            .drop("__sa", "__gsig", "__gid")
-        )
-    if persist:
-        pairs._dhs_persisted = sigs  # release handle (see docstring)
-    return pairs
+    combos = F.flatten(F.transform(
+        F.sequence(F.lit(0), F.size("__m") - 2),
+        lambda i: F.transform(
+            F.slice(F.col("__m"), i + 2, F.size("__m")),
+            lambda y: pair(F.col("__m")[i], y)),
+    ))
+    # strict <: a doc id occurring twice in the input would otherwise
+    # emit an (x, x) self-pair.  The agreement gate is pair-constant,
+    # so filtering per co-occurrence keeps exactly the pairs (and
+    # n_bands counts) a gate after the pair aggregate would keep, and
+    # only gate-passing co-occurrences cross the pair-key exchange.
+    keep_pair = F.col("__p.id_a") < F.col("__p.id_b")
+    aggs = [F.count(F.lit(1)).alias("n_bands")]
+    if gated:
+        keep_pair = keep_pair & (F.col("__p.sm") >= min_sig_matches)
+        aggs.append(F.max("__p.sm").alias("sig_matches"))
+    return (
+        members.select(F.explode(combos).alias("__p"))
+        .where(keep_pair)
+        .groupBy(F.col("__p.id_a").alias("id_a"),
+                 F.col("__p.id_b").alias("id_b"))
+        .agg(*aggs)
+    )
 
 
 def release_candidates_cache(pairs: DataFrame) -> None:
-    """Unpersist the signature projection cached by
-    :func:`minhash_lsh_candidates` (no-op if none was persisted or the
-    handle was already released)."""
+    """Unpersist the shingle projection that
+    :func:`jaccard_verify_pairs` (``persist=True``) caches and attaches
+    to its result as ``_dhs_persisted`` (no-op if the result carries
+    none or the handle was already released)."""
     cached = getattr(pairs, "_dhs_persisted", None)
     if cached is not None:
         cached.unpersist()
@@ -1131,7 +963,7 @@ def write_signature_table(df: DataFrame, table: str, text_col: str = "text",
     if scratch_budget(df.sparkSession) is not None:
         _text_band_preflight(
             df, text_col, num_perm, bands, hash_fn,
-            join_sides=1, carry_sig=True, sig_gate=False,
+            carry_sig=True,
             what=(f"write_signature_table's build shuffles (pre-fold "
                   f"repartition + bucketing; num_perm={num_perm}, "
                   f"bands={bands})"),
@@ -1307,7 +1139,7 @@ def dedup_incremental_lsh(new_df: DataFrame, seen_banded, /,
     if scratch_budget(new_df.sparkSession) is not None:
         _text_band_preflight(
             new_df, text_col, num_perm, bands, hash_fn,
-            join_sides=1, carry_sig=True, sig_gate=False,
+            carry_sig=True,
             what=(f"dedup_incremental_lsh's batch band shuffle "
                   f"(num_perm={num_perm}, bands={bands})"),
             remedies=(
@@ -1923,8 +1755,8 @@ def simhash_candidates(df: DataFrame, text_col: str = "text",
 
     ``persist`` materializes the (id, simhash) set once so the Arrow
     pandas_udf fold does not run on both join sides (8 bytes/doc);
-    off by default — see minhash_lsh_candidates for the measured
-    tradeoff — but worth flipping when the UDF dominates (long docs).
+    off by default (the cache costs a materialization pass of its
+    own) but worth flipping when the UDF dominates (long docs).
     """
     chunks = simhash_banded(df, text_col, id_col, max_hamming,
                             hash_fn=hash_fn, persist=persist)
@@ -2012,11 +1844,14 @@ def jaccard_verify_pairs(pairs: DataFrame, docs: DataFrame,
     ``"column"`` keeps the pure-Column reference path.
 
     ``persist`` caches the per-document shingle projection so the two
-    pair-side joins don't shingle the corpus twice; the handle travels
-    on the result as ``_dhs_persisted`` (release with
-    :func:`release_candidates_cache` once materialized).  NOTE: the
-    ``pairs`` plan is consumed three times here (two involved-id scans
-    + the pair join) — checkpoint/persist it first if it is expensive.
+    pair-side joins don't shingle the corpus twice; the cache stays
+    until released, and its handle travels on the result as
+    ``_dhs_persisted`` — call :func:`release_candidates_cache` on the
+    result once it is materialized.  NOTE: the ``pairs`` plan is
+    consumed three times here (two involved-id scans + the pair join)
+    — checkpoint/persist it first if it is expensive (a
+    :func:`minhash_lsh_candidates` result re-runs its corpus pass per
+    consumer).
 
     ``broadcast_pairs`` hints the pair set (and its distinct involved
     ids) as the broadcast side of every join here.  A checkpointed
@@ -2163,9 +1998,10 @@ def _release_local_checkpoint(df: DataFrame) -> None:
        DataFrame is unrecoverable (it cannot recompute), so releasing
        a still-referenced checkpoint breaks every later action on it.
        This is the reason the helper is module-private; external
-       callers should prefer :func:`release_clusters_checkpoint` /
-       :func:`release_candidates_cache`, which only release handles
-       the producing operator has explicitly marked as disposable."""
+       callers should prefer :func:`release_clusters_checkpoint` (the
+       clusters' checkpoint) or :func:`release_candidates_cache` (the
+       verify's shingle cache), which only release handles the
+       producing operator has explicitly marked as disposable."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(True)
     except Exception:

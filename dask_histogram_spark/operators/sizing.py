@@ -118,8 +118,8 @@ def parts_for_memory(spark, est_groups: int, *,
 # 10M embedding ladder (~48 GB exchange filled a ~79 GB volume to the
 # 97% kill line, ratio >= ~1.6 at death) and the round-13 peak-sampled
 # corroboration at a different operating point (2M x dim128 x reps4:
-# peak 14.63 GiB / 8.23 GiB modeled exchange = 1.78,
-# scripts/blowup_scratch_safety.py)
+# peak scratch sampled during the run 14.63 GiB / 8.23 GiB modeled
+# exchange = 1.78)
 SHUFFLE_SCRATCH_SAFETY = 2.0
 
 

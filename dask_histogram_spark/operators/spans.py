@@ -474,11 +474,12 @@ def _dup_grams(windows: DataFrame, id_col: str, min_df: int,
     recognizes the hash distribution as satisfied).  Default (None)
     keeps the session's shuffle sizing: at small inputs AQE coalesces
     anyway and nothing changes.  This is the round-8 capstone lesson
-    moved out of ``scripts/blowup_spans.py`` into the operator — a
-    100 TB caller of :func:`dup_span_stats` /
-    :func:`remove_duplicate_spans` must not need a babysitting script
-    to survive the gram aggregate.  (The explicit repartition trades
-    away map-side partial aggregation, which buys ~nothing here:
+    (a scale ladder whose gram aggregate survived only with this
+    width set by hand) moved into the operator — a 100 TB caller of
+    :func:`dup_span_stats` / :func:`remove_duplicate_spans` must not
+    need a babysitting script to survive the gram aggregate.  (The
+    explicit repartition trades away map-side partial aggregation,
+    which buys ~nothing here:
     grams are mostly distinct, so partials barely compress — the
     binding constraint is the reduce-side hash map, which this sizes
     exactly.)

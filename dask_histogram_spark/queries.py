@@ -1043,13 +1043,12 @@ def _q_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    min_sig_matches=10)
     # checkpoint the (tiny, ~30k-row) pruned pair set: the verify step
     # consumes it three times (two involved-id scans + the pair join)
-    # and would otherwise re-run the band join each time.  (Round-15
+    # and would otherwise re-run the corpus pass each time.  (Round-15
     # A/B: landing it locally via a capped Arrow collect instead —
     # the dedup_clusters posture — was measured NEUTRAL-to-worse here:
     # same 20-job count, and the re-parallelized local relation made
     # the verify joins ~1 s slower; the checkpoint stays.)
     pruned = cands.localCheckpoint()
-    release_candidates_cache(cands)  # signature cache served its turn
     # broadcast_pairs: pruned is a checkpointed ~C(max_bucket,2)-bounded
     # pair-id set (30k rows at sf0.1) with no stats — without the hint
     # the planner sort-merges and shuffles the shingle arrays twice
@@ -1867,7 +1866,6 @@ def _chain_leg_rows(spark: SparkSession, sf_dir: str) -> list[tuple]:
                                    hash_fn="fnv1a32", max_bucket=20,
                                    min_sig_matches=10)
     pruned = cands.localCheckpoint()
-    release_candidates_cache(cands)
     verified = jaccard_verify_pairs(pruned, ex, k=8, threshold=0.5,
                                     persist=True)
     clusters = dedup_clusters(verified)
@@ -2689,9 +2687,9 @@ _MINHASH_CAND_SQL = (
     "AND a.doc_id < b2.doc_id GROUP BY 1, 2"
 )
 
-# (minhash_lsh_candidates itself is gated through minhash_lsh_stats —
-# the stats twin runs the identical band join — and end-to-end through
-# dedup_pipeline below.)
+# (minhash_lsh_candidates' full rows are differentially tested against
+# this SQL and its capped/gated variants in the test suite, and gated
+# end-to-end through dedup_pipeline below.)
 
 _register("dedup_pipeline", _q_dedup_pipeline, _dedup_pipeline_oracle())
 
@@ -2840,7 +2838,7 @@ def _q_streaming_minhash_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     first seen), hence not directly hashable — the component invariant
     is the strongest order-free contract.
     """
-    from .operators import minhash_lsh_candidates, release_candidates_cache
+    from .operators import minhash_lsh_candidates
     from .streaming import streaming_minhash_candidates
 
     corpus = _dup_corpus(spark, sf_dir).select("doc_id", "text")
@@ -2854,7 +2852,6 @@ def _q_streaming_minhash_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch_pairs = [
         (r.id_a, r.id_b) for r in cands.select("id_a", "id_b").collect()
     ]
-    release_candidates_cache(cands)
     return _coverage_row(spark, stream_pairs, batch_pairs)
 
 

@@ -238,7 +238,6 @@ def run_point(spark: SparkSession, n_docs: int) -> dict:
         raise AssertionError(
             f"near-dup recall: {missed} planted pairs missed "
             f"(> budget {budget}) — beyond bucket-cap loss")
-    release_candidates_cache(cands)
     release_candidates_cache(verified)
     release_clusters_checkpoint(clusters)
     _release_local_checkpoint(pruned)

@@ -84,7 +84,6 @@ def run_point(spark: SparkSession, n_docs: int,
     pruned = cands.localCheckpoint()  # forces candidate generation
     n_cand = pruned.count()
     t_cand = time.perf_counter() - t0
-    release_candidates_cache(cands)
 
     t0 = time.perf_counter()
     verified = jaccard_verify_pairs(pruned, corpus, k=8, threshold=0.5,

@@ -87,14 +87,14 @@ def main() -> None:
                                threshold=0.5, persist=True,
                                broadcast_pairs=True, eager_persist=False)
     sections["dedup_pipeline"] = [
-        ("candidate generation (fold cache -> band explode -> ONE "
-         "hash exchange reused by the bucket agg — changeset #19; "
-         "sig gate broadcast joins)", executed(cands)),
+        ("candidate generation (signature fold -> band explode "
+         "carrying the signature -> ONE hash exchange reused by the "
+         "window cap and the bucket agg -> gated combination "
+         "explode -> pair agg; no join, no cache)", executed(cands)),
         ("verify (broadcast pair joins over the lazily-persisted "
          "shingle projection — changesets #1/#12/#26)", executed(ver)),
     ]
     from dask_histogram_spark.operators import release_candidates_cache
-    release_candidates_cache(cands)
     release_candidates_cache(ver)
 
     # minhash_lsh_stats is eager (one collect of one plan inside the

@@ -191,17 +191,14 @@ def test_minhash_lsh_stats_matches_candidates(spark, docs_with_dups):
     from dask_histogram_spark.operators import (
         minhash_banded,
         minhash_lsh_stats,
-        release_candidates_cache,
     )
 
     df, n = docs_with_dups
     row = minhash_lsh_stats(df, num_perm=32, bands=8, max_bucket=8).collect()[0]
     capped = minhash_lsh_candidates(df, num_perm=32, bands=8, max_bucket=8)
     n_capped = capped.count()
-    release_candidates_cache(capped)
     uncapped = minhash_lsh_candidates(df, num_perm=32, bands=8)
     sum_bands = uncapped.agg(F.sum("n_bands")).collect()[0][0]
-    release_candidates_cache(uncapped)
     sizes = (minhash_banded(df, num_perm=32, bands=8)
              .groupBy("band", "bucket").agg(F.count("doc_id").alias("n"))
              .agg(F.count(F.lit(1)).alias("n_buckets"),
@@ -1059,13 +1056,11 @@ def test_text_band_shuffle_scratch_preflight(spark, tables):
     """The text-side LSH band shuffles fail FAST with the remedy list
     when the modeled exchange cannot fit the scratch volume — the
     minhash twins of the embedding guard (round-12 VERDICT #2):
-    minhash_lsh_candidates' band self-join and write_signature_table's
+    minhash_lsh_candidates' band exchange and write_signature_table's
     bucketed build, which at 1-10 B docs exchange multi-TB of band
     rows."""
     import pytest
     from unittest.mock import patch
-
-    from pyspark.sql import DataFrame
 
     from dask_histogram_spark.operators import (
         minhash_lsh_candidates, sizing, write_signature_table)
@@ -1081,30 +1076,33 @@ def test_text_band_shuffle_scratch_preflight(spark, tables):
         # empty/all-null text short-circuits: no shuffle will launch,
         # so the guard must not refuse
         empty = docs.where("doc_id < 0")
-        minhash_lsh_candidates(empty, num_perm=16, bands=4,
-                               persist=False)
+        minhash_lsh_candidates(empty, num_perm=16, bands=4)
         allnull = docs.select("doc_id",
                               F.lit(None).cast("string").alias("text"))
-        minhash_lsh_candidates(allnull, num_perm=16, bands=4,
-                               persist=False)
+        minhash_lsh_candidates(allnull, num_perm=16, bands=4)
         # the writer refuses BEFORE the sidecar drop: an existing
         # table must survive an over-budget rebuild attempt
         with pytest.raises(RuntimeError, match="pre-fold repartition"):
             write_signature_table(docs, "txt_preflight_refused_tbl",
                                   num_perm=16, bands=4)
     assert not spark.catalog.tableExists("txt_preflight_refused_tbl__params")
-    # unknown budget (cluster contract) + persist=False: zero eager
-    # jobs at plan-construction time — the probe agg must not run.
+    # unknown budget (cluster contract): zero eager jobs at
+    # plan-construction time for the default call — neither the probe
+    # agg nor any cache materialization may run.  Patch the concrete
+    # DataFrame class (the public one is an ABC its instances do not
+    # dispatch through) and also compare Spark's job IDs.
     # Clear the probe memo first: a memo HIT would skip the patched
     # first()/count() and mask a wrongly-invoked probe.
     sizing.clear_probe_memo()
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
     with patch.object(sizing, "scratch_budget", return_value=None), \
-            patch.object(DataFrame, "first",
+            patch.object(type(docs), "first",
                          side_effect=AssertionError("eager first")), \
-            patch.object(DataFrame, "count",
+            patch.object(type(docs), "count",
                          side_effect=AssertionError("eager count")):
-        minhash_lsh_candidates(docs, num_perm=16, bands=4,
-                               persist=False)
+        minhash_lsh_candidates(docs, num_perm=16, bands=4)
+    assert set(tracker.getJobIdsForGroup(None)) == before
 
 
 def test_text_preflight_counts_utf8_octets(spark):
@@ -1126,14 +1124,14 @@ def test_text_preflight_counts_utf8_octets(spark):
         F.col("id").alias("doc_id"),
         F.lit("あ" * chars).alias("text"))  # 3 bytes/char in UTF-8
     band_row = 8 + 12 + _TEXT_ROW_OVERHEAD_BYTES  # xxhash64 bucket
-    fixed = n * _TEXT_ROW_OVERHEAD_BYTES + 2 * n * 4 * band_row
+    # pre-fold spread + ONE band exchange of n x bands rows
+    fixed = n * _TEXT_ROW_OVERHEAD_BYTES + n * 4 * band_row
     est_chars = n * chars + fixed        # the pre-fix (wrong) model
     est_bytes = n * chars * 3 + fixed    # correct octet model
     budget = int(2 * (est_chars + est_bytes) / 2)  # between the two x2
     with patch.object(sizing, "scratch_budget", return_value=budget):
         with pytest.raises(RuntimeError, match="band shuffle"):
-            minhash_lsh_candidates(docs, num_perm=16, bands=4,
-                                   persist=False)
+            minhash_lsh_candidates(docs, num_perm=16, bands=4)
 
 
 def test_incremental_batch_side_scratch_preflight(spark, tables,
@@ -1194,17 +1192,15 @@ def test_guard_probes_memoized_per_input(spark, tables, tmp_path):
     emb = tables["embeddings"].select("vec_id", "embedding")
 
     base = sizing.PROBE_COMPUTE_COUNT
-    minhash_lsh_candidates(docs, num_perm=16, bands=4,
-                           persist=False).count()
+    minhash_lsh_candidates(docs, num_perm=16, bands=4).count()
     assert sizing.PROBE_COMPUTE_COUNT == base + 1
     # same input, different banding params: the text probe's stats
     # (row count, byte total) are param-independent -> memo hit
-    minhash_lsh_candidates(docs, num_perm=32, bands=8,
-                           persist=False).count()
+    minhash_lsh_candidates(docs, num_perm=32, bands=8).count()
     assert sizing.PROBE_COMPUTE_COUNT == base + 1
     # a semantically DIFFERENT input must probe fresh
     minhash_lsh_candidates(docs.where("doc_id < 100"), num_perm=16,
-                           bands=4, persist=False).count()
+                           bands=4).count()
     assert sizing.PROBE_COMPUTE_COUNT == base + 2
 
     # embedding family: near-dup, table build, and incremental gate
@@ -1321,14 +1317,14 @@ def test_text_preflight_exact_fallback_catches_heavy_tail(spark):
         F.when(F.col("id") == 0, F.expr(f"repeat('x', {giant})"))
         .otherwise(F.lit("abcdefghij")).alias("text"))
     band_row = 8 + 12 + _TEXT_ROW_OVERHEAD_BYTES  # xxhash64 bucket
-    fixed = n * _TEXT_ROW_OVERHEAD_BYTES + 2 * n * 4 * band_row
+    # pre-fold spread + ONE band exchange of n x bands rows
+    fixed = n * _TEXT_ROW_OVERHEAD_BYTES + n * 4 * band_row
     est_blind = n * 10 + fixed          # sample that missed the giant
     est_exact = giant + n * 10 + fixed  # what the exact agg sees
     budget = int(2 * (est_blind + est_exact) / 2)  # between the two x2
     with patch.object(sizing, "scratch_budget", return_value=budget):
         with pytest.raises(RuntimeError, match="band shuffle"):
-            minhash_lsh_candidates(docs, num_perm=16, bands=4,
-                                   persist=False)
+            minhash_lsh_candidates(docs, num_perm=16, bands=4)
 
 
 def test_scratch_budget_honors_spark_local_dirs(spark, tmp_path):
@@ -1730,25 +1726,60 @@ def test_minhash_max_bucket_cap(spark):
     assert boiler_pairs <= full                 # ...but present uncapped
 
 
-def test_minhash_fused_matches_semijoin(spark, tables):
-    """The one-shuffle fused candidate plan (bucket collect_list +
-    combination explode) returns EXACTLY the pairs and n_bands counts
-    of the semi-join + self-join plan under the same cap, and refuses
-    to run uncapped (unbounded bucket collection)."""
-    d = tables["documents"].select("doc_id", "text")
+def test_minhash_candidates_match_duckdb(spark, tables):
+    """minhash_lsh_candidates' full rows (id_a, id_b, n_bands[,
+    sig_matches]) equal DuckDB's band-bucket self-join over the dup
+    corpus plus 40 copies of one boilerplate text (an 80-doc bucket in
+    every band, so the cap bites): uncapped against the registry's
+    _MINHASH_CAND_SQL, and capped and capped + gated built from the
+    same parts with the dedup_pipeline oracle's HAVING COUNT(*) <= 20
+    cap and >= 10 of 32 agreement gate."""
+    import duckdb
+
+    from dask_histogram_spark.queries import (
+        _DUP_SQL, _MH_HS, _MH_SIG, _MINHASH_CAND_SQL, _minhash_band_sql)
+
+    boiler = " ".join(f"boilerplate{i} footer" for i in range(30))
+    d = tables["documents"].select("doc_id", "text").unionByName(
+        spark.range(40).select((F.col("id") + 90000).alias("doc_id"),
+                               F.lit(boiler).alias("text")))
     corpus = d.unionByName(d.withColumn("doc_id", F.col("doc_id") + 100000))
-    kw = dict(num_perm=32, bands=8, hash_fn="fnv1a32", max_bucket=20,
-              persist=False)
-    fused = {(r.id_a, r.id_b): r.n_bands
-             for r in minhash_lsh_candidates(
-                 corpus, strategy="fused", **kw).collect()}
-    semi = {(r.id_a, r.id_b): r.n_bands
-            for r in minhash_lsh_candidates(
-                corpus, strategy="semijoin", **kw).collect()}
-    assert fused == semi and fused
-    with pytest.raises(ValueError, match="fused"):
-        minhash_lsh_candidates(corpus, num_perm=32, bands=8,
-                               strategy="fused", persist=False)
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT doc_id, text FROM read_parquet("
+        f"'{SF_DIR}/documents.parquet') UNION ALL SELECT "
+        f"CAST(90000 + i AS BIGINT), '{boiler}' FROM range(40) t(i)")
+    capped = (
+        f"WITH h AS (SELECT doc_id, {_MH_HS} AS hs FROM {_DUP_SQL}), "
+        f"s AS (SELECT doc_id, {_MH_SIG} AS sig FROM h), "
+        f"b AS ({_minhash_band_sql(bands=8, r=4)}), "
+        "ok AS (SELECT band, bucket FROM b GROUP BY band, bucket "
+        "HAVING COUNT(*) <= 20), "
+        "bc AS (SELECT b.* FROM b JOIN ok USING (band, bucket)), "
+        "p AS (SELECT a.doc_id AS id_a, b2.doc_id AS id_b, "
+        "COUNT(*) AS n_bands FROM bc a JOIN bc b2 ON a.band = b2.band "
+        "AND a.bucket = b2.bucket AND a.doc_id < b2.doc_id GROUP BY 1, 2) ")
+    gated = (
+        "SELECT * FROM (SELECT p.*, len(list_filter(range(1, 33), "
+        "i -> sa.sig[i] = sb.sig[i])) AS sig_matches FROM p "
+        "JOIN s sa ON sa.doc_id = p.id_a JOIN s sb ON sb.doc_id = p.id_b) "
+        "WHERE sig_matches >= 10")
+    cases = {(None, None): _MINHASH_CAND_SQL,
+             (20, None): capped + "SELECT * FROM p",
+             (20, 10): capped + gated}
+    got = {}
+    for (mb, ms), sql in cases.items():
+        cands = minhash_lsh_candidates(corpus, num_perm=32, bands=8,
+                                       hash_fn="fnv1a32", max_bucket=mb,
+                                       min_sig_matches=ms)
+        want = sorted(con.execute(sql).fetchall())
+        got[mb, ms] = sorted(tuple(r) for r in cands.collect())
+        assert cands.columns == (["id_a", "id_b", "n_bands"]
+                                 + ["sig_matches"] * (ms is not None))
+        assert got[mb, ms] == want, (mb, ms)
+    # non-degenerate: the cap drops the boilerplate bucket's C(80, 2)
+    # pairs, and the gate then drops more
+    assert len(got[20, 10]) < len(got[20, None]) < len(got[None, None])
 
 
 def test_near_dup_sig_arrow_matches_column(spark, tables):
@@ -1824,7 +1855,7 @@ def test_jaccard_verify_pairs_matches_full_join(spark, docs_with_dups):
     )
 
     df, n = docs_with_dups
-    cands = minhash_lsh_candidates(df, num_perm=32, bands=8, persist=False)
+    cands = minhash_lsh_candidates(df, num_perm=32, bands=8)
     got = {
         (r.id_a, r.id_b): r.jaccard
         for r in jaccard_verify_pairs(cands, df, k=8, threshold=0.5).collect()
@@ -1853,8 +1884,8 @@ def test_verify_eager_persist_modes_identical(spark, docs_with_dups):
     )
 
     df, _ = docs_with_dups
-    cands = minhash_lsh_candidates(df, num_perm=32, bands=8,
-                                   persist=False).localCheckpoint()
+    cands = minhash_lsh_candidates(df, num_perm=32,
+                                   bands=8).localCheckpoint()
     outs = []
     for mode in (True, False, "auto"):
         v = jaccard_verify_pairs(cands, df, k=8, threshold=0.5,
@@ -1867,20 +1898,33 @@ def test_verify_eager_persist_modes_identical(spark, docs_with_dups):
 
 
 def test_release_candidates_cache(spark, docs_with_dups):
+    """Candidates cache nothing: no release handle on the result and
+    no persistent RDD after they are built and collected.  The one
+    handle left is jaccard_verify_pairs(persist=True)'s shingle cache,
+    which release_candidates_cache unpersists, idempotently."""
     from dask_histogram_spark.operators import (
+        jaccard_verify_pairs,
         minhash_lsh_candidates,
         release_candidates_cache,
     )
 
     df, _ = docs_with_dups
-    pairs = minhash_lsh_candidates(df, num_perm=32, bands=8, persist=True)
-    pairs.count()
-    cached = pairs._dhs_persisted
+    sc = spark.sparkContext._jsc.sc()
+    base = sc.getPersistentRDDs().size()
+    cands = minhash_lsh_candidates(df, num_perm=32, bands=8)
+    assert getattr(cands, "_dhs_persisted", None) is None
+    assert cands.collect()
+    assert sc.getPersistentRDDs().size() <= base
+
+    verified = jaccard_verify_pairs(cands, df, k=8, threshold=0.5,
+                                    persist=True)
+    verified.count()
+    cached = verified._dhs_persisted
     assert cached is not None and cached.storageLevel.useMemory
-    release_candidates_cache(pairs)
-    assert pairs._dhs_persisted is None
+    release_candidates_cache(verified)
+    assert verified._dhs_persisted is None
     assert not cached.storageLevel.useMemory
-    release_candidates_cache(pairs)  # idempotent no-op
+    release_candidates_cache(verified)  # idempotent no-op
 
 
 def test_fit_centroids_sample_cap(spark, tables):
@@ -2064,7 +2108,6 @@ def test_sig_agreement_gate_keeps_all_verified_winners(spark, tables):
     from dask_histogram_spark.operators import (
         jaccard_verify_pairs,
         minhash_lsh_candidates,
-        release_candidates_cache,
     )
 
     d = tables["documents"].select("doc_id", "text")
@@ -2077,8 +2120,6 @@ def test_sig_agreement_gate_keeps_all_verified_winners(spark, tables):
              jaccard_verify_pairs(ungated, corpus, k=8, threshold=0.5).collect()}
     v_gated = {(r.id_a, r.id_b) for r in
                jaccard_verify_pairs(gated, corpus, k=8, threshold=0.5).collect()}
-    release_candidates_cache(ungated)
-    release_candidates_cache(gated)
     assert v_all  # the dup corpus must actually produce winners
     assert v_gated == v_all
 
@@ -2107,14 +2148,13 @@ def test_verify_pairs_arrow_matches_column(spark, tables):
     """Arrow FNV-64 shingling == the Column xxhash64 path on the real
     dup corpus (hash is join-internal; intersection counts agree)."""
     from dask_histogram_spark.operators import (
-        jaccard_verify_pairs, minhash_lsh_candidates,
-        release_candidates_cache)
+        jaccard_verify_pairs, minhash_lsh_candidates)
 
     d = tables["documents"].select("doc_id", "text")
     corpus = d.unionByName(d.withColumn("doc_id", F.col("doc_id") + 100000))
     cands = minhash_lsh_candidates(corpus, num_perm=32, bands=8,
-                                   hash_fn="fnv1a32", max_bucket=20,
-                                   persist=False).localCheckpoint()
+                                   hash_fn="fnv1a32",
+                                   max_bucket=20).localCheckpoint()
     a = {(r.id_a, r.id_b, r.jaccard) for r in jaccard_verify_pairs(
         cands, corpus, k=8, threshold=0.5, method="arrow").collect()}
     b = {(r.id_a, r.id_b, r.jaccard) for r in jaccard_verify_pairs(
@@ -2514,7 +2554,7 @@ def test_empty_inputs_return_typed_empty_results(spark):
     docs = spark.createDataFrame([(1, "hello world")],
                                  "doc_id long, text string")
     assert minhash_lsh_candidates(empty, num_perm=8, bands=4,
-                                  max_bucket=5, persist=False).count() == 0
+                                  max_bucket=5).count() == 0
     assert ngram_jaccard_pairs(empty, k=3, threshold=0.5).count() == 0
     assert dedup_exact(empty).count() == 0
     assert contamination_check(empty, docs).count() == 0
@@ -3528,28 +3568,3 @@ def test_local_relation_matches_create(spark):
     assert [tuple(r) for r in got] == [(7, "z")] and jobs == 0
     got, jobs = collect_jobs(big)
     assert len(got) == 7500 and got[-1]["s"] == "7499" and jobs == 0
-
-
-def test_single_pass_gated_candidates_match_semijoin(spark, tables):
-    """The gated fused path is now a SINGLE-PASS plan (sig denormalized
-    into the band rows, window-count cap before the bucket arrays,
-    agreement gate inside the combination explode): its full row set —
-    including n_bands and sig_matches — must equal the two-pass
-    semijoin strategy's, and the plan must contain no join and no
-    cached signature projection."""
-    d = tables["documents"].select("doc_id", "text")
-    corpus = d.unionByName(d.withColumn("doc_id", F.col("doc_id") + 100000))
-    kw = dict(num_perm=32, bands=8, hash_fn="fnv1a32", max_bucket=20,
-              min_sig_matches=10)
-    fused = minhash_lsh_candidates(corpus, **kw)
-    assert fused.columns == ["id_a", "id_b", "n_bands", "sig_matches"]
-    plan = fused._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan, plan[:1200]
-    assert "InMemoryRelation" not in plan, plan[:1200]
-    from dask_histogram_spark.operators import release_candidates_cache
-
-    a = {tuple(r) for r in fused.collect()}
-    semi = minhash_lsh_candidates(corpus, strategy="semijoin", **kw)
-    b = {tuple(r) for r in semi.collect()}
-    release_candidates_cache(semi)
-    assert a and a == b

@@ -375,8 +375,8 @@ def test_dedup_pipeline_registry_entry_executes_fused_candidates(
     """The registry's dedup_pipeline row must actually route through the
     fused one-shuffle candidate plan (the operator-level assert below
     checks the plan SHAPE; this one checks the registry entry's real
-    call produces it — a config drift to the semijoin strategy or an
-    uncapped call would pass the other test unnoticed)."""
+    call produces it — an uncapped call, whose mega-buckets would
+    collect whole, would pass the other test unnoticed)."""
     import dask_histogram_spark.operators as ops
 
     real = ops.minhash_lsh_candidates
@@ -398,24 +398,24 @@ def test_dedup_pipeline_registry_entry_executes_fused_candidates(
     assert "collect_list" in plan
 
 
-def test_fused_candidate_plan_has_no_self_join(spark):
-    """The capped LSH candidate path must be the ONE-shuffle fused plan
-    (bucket collect_list + combination explode): no sort-merge or
-    shuffled-hash join anywhere before the signature gate, while the
-    semijoin strategy keeps its band-bucket equi-join."""
+@pytest.mark.parametrize("max_bucket,min_sig_matches",
+                         [(20, None), (None, None), (20, 10), (None, 10)])
+def test_fused_candidate_plan_has_no_self_join(spark, max_bucket,
+                                               min_sig_matches):
+    """Every cap/gate mix of the LSH candidates runs the ONE plan
+    (window-capped bucket collect_list + combination explode): no join
+    of any kind (no band self-join, no signature gate join) and no
+    cached signature projection."""
     from dask_histogram_spark.operators import minhash_lsh_candidates
     from dask_histogram_spark.queries import get_tables
 
     d = get_tables(spark, SF_DIR)["documents"].select("doc_id", "text")
-    fused = _executed_plan(minhash_lsh_candidates(
-        d, num_perm=32, bands=8, max_bucket=20, persist=False))
-    assert "SortMergeJoin" not in fused and "ShuffledHashJoin" not in fused, \
-        fused[:1200]
-    assert "collect_list" in fused
-    semi = _executed_plan(minhash_lsh_candidates(
-        d, num_perm=32, bands=8, max_bucket=20, persist=False,
-        strategy="semijoin"))
-    assert "Join" in semi
+    plan = _executed_plan(minhash_lsh_candidates(
+        d, num_perm=32, bands=8, max_bucket=max_bucket,
+        min_sig_matches=min_sig_matches))
+    assert "Join" not in plan, plan[:1200]
+    assert "InMemoryRelation" not in plan, plan[:1200]
+    assert "collect_list" in plan
 
 
 def test_verify_shingle_projection_runs_spread(spark):
