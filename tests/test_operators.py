@@ -1726,14 +1726,15 @@ def test_minhash_max_bucket_cap(spark):
     assert boiler_pairs <= full                 # ...but present uncapped
 
 
-def test_minhash_candidates_match_duckdb(spark, tables):
-    """minhash_lsh_candidates' full rows (id_a, id_b, n_bands[,
-    sig_matches]) equal DuckDB's band-bucket self-join over the dup
-    corpus plus 40 copies of one boilerplate text (an 80-doc bucket in
-    every band, so the cap bites): uncapped against the registry's
-    _MINHASH_CAND_SQL, and capped and capped + gated built from the
-    same parts with the dedup_pipeline oracle's HAVING COUNT(*) <= 20
-    cap and >= 10 of 32 agreement gate."""
+def _minhash_semijoin_cases(spark, tables):
+    """The dup corpus plus 40 copies of one boilerplate text (an 80-doc
+    bucket in every band, so a cap of 20 bites), a DuckDB connection
+    over the same docs, and per (max_bucket, min_sig_matches) the
+    DuckDB semi-join + self-join plan that minhash_lsh_candidates must
+    reproduce: uncapped is the registry's _MINHASH_CAND_SQL; capped
+    semi-joins the band rows to the buckets with HAVING COUNT(*) <= 20
+    before the self-join, and gated adds the dedup_pipeline oracle's
+    >= 10 of 32 agreement gate."""
     import duckdb
 
     from dask_histogram_spark.queries import (
@@ -1767,19 +1768,48 @@ def test_minhash_candidates_match_duckdb(spark, tables):
     cases = {(None, None): _MINHASH_CAND_SQL,
              (20, None): capped + "SELECT * FROM p",
              (20, 10): capped + gated}
+    return corpus, con, cases
+
+
+def _minhash_candidates(corpus, mb, ms):
+    return minhash_lsh_candidates(corpus, num_perm=32, bands=8,
+                                  hash_fn="fnv1a32", max_bucket=mb,
+                                  min_sig_matches=ms)
+
+
+def test_minhash_fused_matches_semijoin(spark, tables):
+    """The one-shuffle candidate plan (bucket collect_list +
+    combination explode) returns exactly the rows (id_a, id_b, n_bands)
+    of the semi-join + self-join plan, run in DuckDB, both uncapped and
+    under a cap of 20 that drops the 80-doc boilerplate bucket."""
+    corpus, con, cases = _minhash_semijoin_cases(spark, tables)
     got = {}
-    for (mb, ms), sql in cases.items():
-        cands = minhash_lsh_candidates(corpus, num_perm=32, bands=8,
-                                       hash_fn="fnv1a32", max_bucket=mb,
-                                       min_sig_matches=ms)
-        want = sorted(con.execute(sql).fetchall())
-        got[mb, ms] = sorted(tuple(r) for r in cands.collect())
-        assert cands.columns == (["id_a", "id_b", "n_bands"]
-                                 + ["sig_matches"] * (ms is not None))
-        assert got[mb, ms] == want, (mb, ms)
-    # non-degenerate: the cap drops the boilerplate bucket's C(80, 2)
-    # pairs, and the gate then drops more
-    assert len(got[20, 10]) < len(got[20, None]) < len(got[None, None])
+    for mb in (None, 20):
+        cands = _minhash_candidates(corpus, mb, None)
+        assert cands.columns == ["id_a", "id_b", "n_bands"]
+        got[mb] = sorted(tuple(r) for r in cands.collect())
+        assert got[mb] == sorted(con.execute(cases[mb, None]).fetchall()), mb
+    # non-degenerate: the cap drops the boilerplate bucket's C(80, 2) pairs
+    assert 0 < len(got[20]) < len(got[None])
+
+
+def test_single_pass_gated_candidates_match_semijoin(spark, tables):
+    """The gated plan is single-pass (signature carried in the band
+    rows, window-count cap before the bucket arrays, agreement gate
+    inside the combination explode): its full rows, n_bands and
+    sig_matches included, equal the DuckDB semi-join + self-join plan
+    with the >= 10 of 32 gate under a cap of 20, and its plan holds no
+    join and no cached signature projection."""
+    corpus, con, cases = _minhash_semijoin_cases(spark, tables)
+    cands = _minhash_candidates(corpus, 20, 10)
+    assert cands.columns == ["id_a", "id_b", "n_bands", "sig_matches"]
+    plan = cands._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan, plan[:1200]
+    assert "InMemoryRelation" not in plan, plan[:1200]
+    got = sorted(tuple(r) for r in cands.collect())
+    assert got == sorted(con.execute(cases[20, 10]).fetchall())
+    # non-degenerate: the gate drops some capped pairs, not all
+    assert 0 < len(got) < len(con.execute(cases[20, None]).fetchall())
 
 
 def test_near_dup_sig_arrow_matches_column(spark, tables):
