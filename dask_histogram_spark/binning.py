@@ -1,28 +1,32 @@
 """Axis -> bin-index expression generation.
 
-Two generators per axis kind, guaranteed consistent because both are
-derived from the same spec and the same closed-form arithmetic:
+:func:`bin_sql` is the one renderer: SQL text that Spark and DuckDB
+parse the same way, so the engine (``fill``, ``windowed_histogram``)
+and the DuckDB oracles (``fill_sql``, the query registry) bin with
+textually identical SQL.  Numbers are rendered as DOUBLE literals (an
+exponent, or ``CAST('inf' AS DOUBLE)``), so both engines compare and
+multiply with exactly the double Python computed; ``scale`` is
+precomputed in Python, and the arithmetic is
+``floor((x - lo) * scale)`` on both sides.
 
-* :func:`bin_column` — a PySpark ``Column`` (pure built-in functions,
-  stays inside whole-stage codegen; no Python UDF in the hot path).
-* :func:`bin_sql` — the equivalent ANSI-SQL text (DuckDB-compatible),
-  used to build differential-test oracles.
+Two axis kinds reach the engine as a Column from :func:`_column_bin`
+instead of SQL text:
+
+* pinned string categories: Spark reads ``'a\\b'`` as 2 characters and
+  DuckDB as 3, so the category list never enters Spark SQL text;
+* Variable axes above ``VARIABLE_UDF_THRESHOLD`` bins: an Arrow-batched
+  numpy searchsorted (O(log n) per row) instead of an O(n) CASE chain.
 
 Semantics (boost-histogram axis contract, SURVEY.md §1.2):
   * Regular/Variable: half-open bins [e_i, e_{i+1}); x < lo -> underflow
     (index -1); x >= hi, NULL and NaN -> overflow (index n).
   * Category axes group on the raw value; with ``growth`` the bin space
     is discovered by the aggregation itself.
-
-The floating-point expression is written identically on both sides
-(``floor((x - lo) * scale)`` with ``scale`` precomputed in Python) so
-Spark and the SQL oracle produce bit-identical bin indices.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-from typing import Union
+import math
 
 import numpy as np
 import pandas as pd
@@ -37,10 +41,9 @@ from .spec import (
     Regular,
     StrCategory,
     Variable,
-    _CategoryAxis,
 )
 
-__all__ = ["bin_column", "bin_sql", "CATEGORY_OVERFLOW"]
+__all__ = ["bin_sql", "CATEGORY_OVERFLOW"]
 
 # Sentinel bin value for out-of-set values on a pinned (growth=False)
 # category axis: SQL NULL.  NULL cannot collide with any real category
@@ -50,7 +53,7 @@ __all__ = ["bin_column", "bin_sql", "CATEGORY_OVERFLOW"]
 # to the axis's single overflow slot (result.py).
 CATEGORY_OVERFLOW = None
 
-# Variable axes beyond this many bins switch from a chained-CASE Column
+# Variable axes beyond this many bins switch from a chained-CASE
 # expression (O(n) per row, codegen) to an Arrow-batched numpy
 # searchsorted pandas_udf (O(log n), vectorized).
 VARIABLE_UDF_THRESHOLD = 512
@@ -58,7 +61,7 @@ VARIABLE_UDF_THRESHOLD = 512
 
 def _variable_bin_searchsorted(x: Column, edges: tuple) -> Column:
     """Large-edge-list Variable binning: vectorized np.searchsorted over
-    Arrow batches.  Identical semantics to the Column form: half-open
+    Arrow batches.  Identical semantics to the CASE form: half-open
     [e_i, e_{i+1}) bins, x < e_0 -> -1, x >= e_last / NaN / NULL -> n."""
     from pyspark.sql import types as T
 
@@ -76,110 +79,71 @@ def _variable_bin_searchsorted(x: Column, edges: tuple) -> Column:
     return bin_udf(x)
 
 
-def _dbl(col: Column) -> Column:
-    return col.cast("double")
+def _column_bin(axis: Axis, col) -> Column | None:
+    """The bin-index Column of an axis that Spark SQL text must not
+    carry (see the module docstring), else None: bin it with
+    :func:`bin_sql`.  ``col`` is a Column or a column name."""
+    pinned_str = (isinstance(axis, StrCategory) and not axis.growth
+                  and axis.categories)
+    big_variable = (isinstance(axis, Variable)
+                    and axis.nbins > VARIABLE_UDF_THRESHOLD)
+    if not (pinned_str or big_variable):
+        return None
+    col = F.col(col) if isinstance(col, str) else col
+    if big_variable:
+        return _variable_bin_searchsorted(col.cast("double"), axis.edge_list)
+    v = col.cast("string")
+    return F.when(v.isin(*axis.categories), v).otherwise(F.lit(CATEGORY_OVERFLOW))
 
 
-def bin_column(axis: Axis, col: Column) -> Column:
-    """Return the bin-index Column (LongType; category axes: raw value)."""
-    if isinstance(axis, Regular):
-        x = _dbl(col)
-        n, lo, hi = axis.n, float(axis.lo), float(axis.hi)
-        scale = n / (hi - lo)
-        idx = F.floor((x - F.lit(lo)) * F.lit(scale)).cast("long")
-        return (
-            F.when(col.isNull() | F.isnan(x), F.lit(n).cast("long"))
-            .when(x < F.lit(lo), F.lit(-1).cast("long"))
-            .when(x >= F.lit(hi), F.lit(n).cast("long"))
-            .otherwise(F.least(idx, F.lit(n - 1).cast("long")))
-        )
-    if isinstance(axis, Variable):
-        x = _dbl(col)
-        edges = axis.edge_list
-        n = axis.nbins
-        if n > VARIABLE_UDF_THRESHOLD:
-            return _variable_bin_searchsorted(x, edges)
-        # Chained half-open comparisons; <= ~hundreds of edges this stays
-        # in codegen.  Beyond VARIABLE_UDF_THRESHOLD the expression tree
-        # (O(n) per row) loses to the Arrow searchsorted fallback above
-        # (O(log n) vectorized).
-        expr = F.lit(n - 1).cast("long")  # last in-range bin
-        for i in range(n - 1, -1, -1):
-            expr = F.when(x < F.lit(float(edges[i + 1])), F.lit(i).cast("long")).otherwise(expr)
-        expr = F.when(x < F.lit(float(edges[0])), F.lit(-1).cast("long")).otherwise(expr)
-        return (
-            F.when(col.isNull() | F.isnan(x), F.lit(n).cast("long"))
-            .when(x >= F.lit(float(edges[-1])), F.lit(n).cast("long"))
-            .otherwise(expr)
-        )
-    if isinstance(axis, Integer):
-        x = _dbl(col)
-        lo, hi = axis.lo, axis.hi
-        n = axis.nbins
-        return (
-            F.when(col.isNull() | F.isnan(x), F.lit(n).cast("long"))
-            .when(x < F.lit(float(lo)), F.lit(-1).cast("long"))
-            .when(x >= F.lit(float(hi)), F.lit(n).cast("long"))
-            .otherwise(F.floor(x).cast("long") - F.lit(lo))
-        )
-    if isinstance(axis, Boolean):
-        return F.when(col.cast("boolean"), F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-    if isinstance(axis, _CategoryAxis):
-        # Group on the raw value; growth falls out of groupBy for free.
-        v = col.cast("long") if isinstance(axis, IntCategory) else col.cast("string")
-        if not axis.growth and axis.categories:
-            # pinned axis: out-of-set values fold to the NULL overflow
-            # sentinel (single overflow slot, boost semantics)
-            return F.when(v.isin(*axis.categories), v).otherwise(
-                F.lit(CATEGORY_OVERFLOW)
-            )
-        return v
-    raise TypeError(f"unsupported axis type: {type(axis).__name__}")
+def _sql_double(v: float) -> str:
+    """A DOUBLE literal both engines parse to exactly ``float(v)`` (a
+    bare ``-4.0`` is a DECIMAL in both)."""
+    v = float(v)
+    if not math.isfinite(v):
+        return f"CAST('{v}' AS DOUBLE)"
+    r = repr(v)
+    return r if "e" in r else f"{r}E0"
 
 
 def bin_sql(axis: Axis, col: str) -> str:
-    """ANSI-SQL (DuckDB-compatible) twin of :func:`bin_column`."""
+    """The bin index of SQL expression ``col`` on ``axis`` (BIGINT;
+    category axes: the raw value, or NULL outside pinned categories)."""
+    x = f"CAST({col} AS DOUBLE)"
+    flow = f"CASE WHEN {col} IS NULL OR isnan({x}) THEN {axis.nbins} "
     if isinstance(axis, Regular):
-        n, lo, hi = axis.n, float(axis.lo), float(axis.hi)
-        scale = n / (hi - lo)
-        x = f"CAST({col} AS DOUBLE)"
+        n, lo, hi = axis.n, _sql_double(axis.lo), _sql_double(axis.hi)
+        scale = _sql_double(n / (float(axis.hi) - float(axis.lo)))
         return (
-            f"CASE WHEN {col} IS NULL OR isnan({x}) THEN {n} "
-            f"WHEN {x} < {lo!r} THEN -1 "
-            f"WHEN {x} >= {hi!r} THEN {n} "
-            f"ELSE LEAST(CAST(FLOOR(({x} - {lo!r}) * {scale!r}) AS BIGINT), {n - 1}) END"
+            f"{flow}WHEN {x} < {lo} THEN -1 WHEN {x} >= {hi} THEN {n} "
+            f"ELSE LEAST(CAST(FLOOR(({x} - {lo}) * {scale}) AS BIGINT), "
+            f"{n - 1}) END"
         )
     if isinstance(axis, Variable):
-        edges = axis.edge_list
+        edges = [_sql_double(e) for e in axis.edge_list]
         n = axis.nbins
-        x = f"CAST({col} AS DOUBLE)"
-        whens = " ".join(
-            f"WHEN {x} < {float(edges[i + 1])!r} THEN {i}" for i in range(n)
-        )
+        whens = " ".join(f"WHEN {x} < {edges[i + 1]} THEN {i}" for i in range(n))
         return (
-            f"CASE WHEN {col} IS NULL OR isnan({x}) THEN {n} "
-            f"WHEN {x} >= {float(edges[-1])!r} THEN {n} "
-            f"WHEN {x} < {float(edges[0])!r} THEN -1 "
-            f"{whens} ELSE {n - 1} END"
+            f"CAST({flow}WHEN {x} >= {edges[-1]} THEN {n} "
+            f"WHEN {x} < {edges[0]} THEN -1 {whens} ELSE {n - 1} END AS BIGINT)"
         )
     if isinstance(axis, Integer):
         n, lo, hi = axis.nbins, axis.lo, axis.hi
-        x = f"CAST({col} AS DOUBLE)"
         return (
-            f"CASE WHEN {col} IS NULL OR isnan({x}) THEN {n} "
-            f"WHEN {x} < {float(lo)!r} THEN -1 "
-            f"WHEN {x} >= {float(hi)!r} THEN {n} "
+            f"{flow}WHEN {x} < {_sql_double(lo)} THEN -1 "
+            f"WHEN {x} >= {_sql_double(hi)} THEN {n} "
             f"ELSE CAST(FLOOR({x}) AS BIGINT) - {lo} END"
         )
     if isinstance(axis, Boolean):
-        return f"CASE WHEN CAST({col} AS BOOLEAN) THEN 1 ELSE 0 END"
+        return f"CAST(CASE WHEN CAST({col} AS BOOLEAN) THEN 1 ELSE 0 END AS BIGINT)"
     if isinstance(axis, (IntCategory, StrCategory)):
-        cast = "BIGINT" if isinstance(axis, IntCategory) else "VARCHAR"
+        cast = "BIGINT" if isinstance(axis, IntCategory) else "STRING"
         v = f"CAST({col} AS {cast})"
         if not axis.growth and axis.categories:
             if isinstance(axis, IntCategory):
                 in_list = ", ".join(str(int(c)) for c in axis.categories)
             else:
+                # DuckDB text only; the engine bins these with _column_bin
                 in_list = ", ".join(
                     "'" + str(c).replace("'", "''") + "'" for c in axis.categories
                 )

@@ -4,35 +4,42 @@ Reference parity map (SURVEY.md §2.1):
 
 * ``fill``               -> reference ``factory`` (core.py:1190-1310):
   the whole partitioned-fill + tree-reduce pipeline collapses into one
-  declarative ``df.select(binExprs).groupBy(bins).agg(storageAggs)``.
+  declarative ``df.selectExpr(binSql).groupBy(bins).agg(storageAggs)``.
   Spark's hash aggregate runs the per-partition partial phase (the
   reference's ``_blocked_*`` kernels, core.py:63-257) and the exchange +
   final phase (the reference's ``_reduction`` tree, core.py:856-885)
   natively; the shuffle payload is <= nbins rows per partition.
 * ``fill_multi``         -> ``_partitioned_histogram_multifill``
-  (core.py:978-1005): staged fills become a ``unionByName`` of per-fill
-  bin projections ahead of a single aggregation, preserving the
-  one-pass-per-partition property.
+  (core.py:978-1005): staged fills read each source relation once,
+  ahead of a single aggregation — the reference's touch-each-partition-
+  once property.  Fills are grouped by the relation they read (the
+  analyzed plan under its deterministic ``Filter``s), so ``df`` and
+  ``df.where(p)`` share one scan; distinct relations are unioned.
 * ``fill_partitioned``   -> ``partitioned_factory`` (core.py:1313-1344):
   keeps ``spark_partition_id()`` as an extra group key.
 * ``collapse``           -> ``PartitionedHistogram.collapse``
   (core.py:841-843): re-aggregates partials over the bin keys.
 
-Everything is built-in Column expressions — no Python UDFs — so the
-whole fill stays inside whole-stage codegen and Catalyst is free to
-push filters/pruning into the scan.
+Projections are SQL text from :func:`~.binning.bin_sql` and aggregates
+come from ``_storage_aggs_sql``: the text the DuckDB oracle
+(:func:`fill_sql`) runs.  Apart from Variable axes above 512 bins (a
+pandas_udf), everything is a built-in expression, so the fill stays
+inside whole-stage codegen and Catalyst is free to push
+filters/pruning into the scan.
 """
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass
+from functools import reduce
 from numbers import Number
 from typing import Sequence, Union
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .binning import bin_column, bin_sql
+from .binning import _column_bin, _sql_double, bin_sql
 from .spec import HistogramSpec, Storage
 
 __all__ = ["fill", "fill_multi", "fill_partitioned", "collapse",
@@ -43,52 +50,11 @@ ColumnLike = Union[str, Column]
 WeightLike = Union[str, Column, float, int, None]
 
 
-def _as_col(c: ColumnLike) -> Column:
-    return F.col(c) if isinstance(c, str) else c
-
-
-def _weight_col(weight: WeightLike) -> Column:
-    """Normalize weight argument; scalars broadcast to all rows
-    (reference: tests/test_core.py:350-359)."""
-    if weight is None:
-        return F.lit(1.0)
-    if isinstance(weight, Number):
-        return F.lit(float(weight))
-    return _as_col(weight).cast("double")
-
-
-def _storage_aggs(spec: HistogramSpec, weighted: bool) -> list[Column]:
-    """Aggregation expressions per storage type (SURVEY.md §2.4)."""
-    st = spec.storage
-    w = F.col("__w")
-    s = F.col("__s")
-    if st is Storage.DOUBLE:
-        if weighted:
-            return [F.sum(w).alias("value")]
-        return [F.count(F.lit(1)).cast("double").alias("value")]
-    if st in (Storage.INT64, Storage.ATOMIC_INT64):
-        return [F.count(F.lit(1)).alias("value")]
-    if st is Storage.WEIGHT:
-        if weighted:
-            return [F.sum(w).alias("value"), F.sum(w * w).alias("sumw2")]
-        return [
-            F.count(F.lit(1)).cast("double").alias("value"),
-            F.count(F.lit(1)).cast("double").alias("sumw2"),
-        ]
-    if st is Storage.MEAN:
-        return [
-            F.count(F.lit(1)).alias("count"),
-            F.sum(s).alias("sum_s"),
-            F.sum(s * s).alias("sum_s2"),
-        ]
-    if st is Storage.WEIGHTED_MEAN:
-        return [
-            F.sum(w).alias("sum_w"),
-            F.sum(w * w).alias("sum_w2"),
-            F.sum(w * s).alias("sum_ws"),
-            F.sum(w * s * s).alias("sum_ws2"),
-        ]
-    raise AssertionError(st)
+def _quote(name: str) -> str:
+    """A column name as SQL text, resolved the way ``F.col(name)`` is."""
+    if "`" in name:
+        return name
+    return ".".join(f"`{p}`" for p in name.split("."))
 
 
 def _merge_aggs(spec: HistogramSpec) -> list[Column]:
@@ -96,6 +62,11 @@ def _merge_aggs(spec: HistogramSpec) -> list[Column]:
     reference ``hist_safe_sum`` core.py:37-38): every accumulator column
     is summed."""
     return [F.sum(F.col(c)).alias(c) for c in spec.value_cols]
+
+
+def _aggs(spec: HistogramSpec, weighted: bool) -> list[Column]:
+    """Aggregation expressions per storage type (SURVEY.md §2.4)."""
+    return [F.expr(a) for a in _storage_aggs_sql(spec, weighted)]
 
 
 @dataclass(frozen=True)
@@ -108,31 +79,59 @@ class FillSpec:
     sample: ColumnLike | None = None
 
 
-def _projection(spec: HistogramSpec, f: FillSpec) -> DataFrame:
+def _fill_items(spec: HistogramSpec, bins: Sequence[str], weight: str | None,
+                sample: str | None, weighted: bool) -> list[tuple[str, str]]:
+    """One fill's ``(sql, name)`` projection from SQL text for its bin
+    indices, weight and sample; engine and oracle share it.  Scalar
+    weights broadcast to all rows (reference tests/test_core.py:350-359);
+    samples carry the spec's stability shift (HistogramSpec.sample_shift)."""
+    items = list(zip(bins, spec.bin_cols))
+    if weighted:
+        items.append((f"CAST({weight or '1.0E0'} AS DOUBLE)", "__w"))
+    if spec.storage.needs_sample:
+        s = f"CAST({sample or 'NULL'} AS DOUBLE)"
+        if spec.sample_shift:
+            s = f"({s} - {_sql_double(spec.sample_shift)})"
+        items.append((s, "__s"))
+    return items
+
+
+def _as(items: list[tuple[str, str]]) -> list[str]:
+    return [f"{e} AS {n}" for e, n in items]
+
+
+def _ref(c: ColumnLike, pre: list) -> str:
+    """SQL text for a raw fill input: a name as an identifier, a Column
+    as ``__i<k>`` of the pre-projection ``pre``."""
+    if isinstance(c, str):
+        return _quote(c)
+    pre.append(c.alias(f"__i{len(pre)}"))
+    return f"__i{len(pre) - 1}"
+
+
+def _with_inputs(df: DataFrame, pre: list) -> DataFrame:
+    return df.select("*", *pre) if pre else df
+
+
+def _fill_text(spec: HistogramSpec, f: FillSpec, weighted: bool,
+               pre: list) -> list[tuple[str, str]]:
+    """The engine's projection of one fill as SQL text; Column inputs
+    (and the bins :func:`~.binning._column_bin` makes) go to ``pre``."""
     if len(f.cols) != spec.ndim:
         raise ValueError(
             f"fill needs one column per axis ({spec.ndim}); got {len(f.cols)}"
         )
     if spec.storage.needs_sample and f.sample is None:
         raise ValueError(f"storage {spec.storage.value} requires a sample")
-    proj = [
-        bin_column(ax, _as_col(c)).alias(name)
-        for ax, c, name in zip(spec.axes, f.cols, spec.bin_cols)
-    ]
-    proj.append(_weight_col(f.weight).alias("__w"))
-    proj.append(_sample_col(spec, f.sample).alias("__s"))
-    return f.df.select(*proj)
-
-
-def _sample_col(spec: HistogramSpec, sample: ColumnLike | None) -> Column:
-    """Sample accumulator input, with the spec's stability shift applied
-    (moments sum (s - K); see HistogramSpec.sample_shift)."""
-    if sample is None:
-        return F.lit(None).cast("double")
-    s = _as_col(sample).cast("double")
-    if spec.sample_shift:
-        s = s - F.lit(float(spec.sample_shift))
-    return s
+    bins = []
+    for ax, c in zip(spec.axes, f.cols):
+        col = _column_bin(ax, c)
+        bins.append(_ref(col, pre) if col is not None else bin_sql(ax, _ref(c, pre)))
+    w = f.weight
+    if w is not None:
+        w = _sql_double(w) if isinstance(w, Number) else _ref(w, pre)
+    s = None if f.sample is None else _ref(f.sample, pre)
+    return _fill_items(spec, bins, w, s, weighted)
 
 
 def fill(
@@ -164,65 +163,118 @@ def fill(
     return fill_multi([FillSpec(df, tuple(cols), weight, sample)], spec)
 
 
-def _fill_struct(spec: HistogramSpec, f: FillSpec) -> Column:
-    """One fill's projection as a struct (for single-scan multifill)."""
-    fields = [
-        bin_column(ax, _as_col(c)).alias(name)
-        for ax, c, name in zip(spec.axes, f.cols, spec.bin_cols)
-    ]
-    fields.append(_weight_col(f.weight).alias("__w"))
-    fields.append(_sample_col(spec, f.sample).alias("__s"))
-    return F.struct(*fields)
+def _peel(df: DataFrame):
+    """``df``'s analyzed plan under its top Filters, and their conditions
+    (JVM expressions).  Peeling stops at a non-deterministic condition
+    or one with a subquery: those stay part of the relation."""
+    plan = df._jdf.queryExecution().analyzed()
+    conds = []
+    while plan.nodeName() == "Filter":
+        c = plan.condition()
+        if not c.deterministic() or not plan.subqueries().isEmpty():
+            break
+        conds.append(c)
+        plan = plan.child()
+    return plan, conds
+
+
+def _sources(fills: Sequence[FillSpec]) -> list[tuple[DataFrame, list, list]]:
+    """Group staged fills by the relation they read, as
+    ``(source, fills, conds)``: a fill whose cond is a Column reads only
+    the source rows where it is true.
+
+    Two fills share a relation when their analyzed plans under the
+    peeled Filters are equal (``.equals``, so expression IDs match, as
+    for ``df`` and ``df.where(p)``; two separate reads of one path do
+    not).  A chain of ``where``s folds to the AND of its conditions.  A
+    group reads the unfiltered member's DataFrame, or, when every member
+    is filtered, the peeled plan under the OR of their conditions, so
+    the scan keeps a pushed-down filter.  A group reading one DataFrame
+    (a lone fill above all) keeps that DataFrame and its own filters.
+    """
+    if len({id(f.df) for f in fills}) == 1:
+        return [(fills[0].df, list(fills), [None] * len(fills))]
+    peeled: dict = {}
+    groups: list = []
+    for f in fills:
+        if id(f.df) not in peeled:
+            peeled[id(f.df)] = _peel(f.df)
+        plan, conds = peeled[id(f.df)]
+        for g in groups:
+            if g[0] is plan or g[0].equals(plan):
+                g[1].append(f)
+                break
+        else:
+            groups.append((plan, [f]))
+    out = []
+    for plan, fs in groups:
+        if len({id(f.df) for f in fs}) == 1:
+            out.append((fs[0].df, fs, [None] * len(fs)))
+            continue
+        spark = fs[0].df.sparkSession
+        jvm = spark._jvm.org.apache.spark.sql.classic
+        cond = {}
+        for f in fs:
+            exprs = peeled[id(f.df)][1]
+            cond.setdefault(id(f.df), reduce(operator.and_, [
+                Column(jvm.ExpressionUtils.column(c)) for c in exprs
+            ]) if exprs else None)
+        conds = [cond[id(f.df)] for f in fs]
+        if all(c is not None for c in conds):
+            base = DataFrame(jvm.Dataset.ofRows(spark._jsparkSession, plan), spark)
+            base = base.where(reduce(operator.or_, cond.values()))
+        else:
+            base = next(f.df for f, c in zip(fs, conds) if c is None)
+        out.append((base, fs, conds))
+    return out
 
 
 def fill_multi(fills: Sequence[FillSpec], spec: HistogramSpec) -> DataFrame:
     """Multiple staged fills -> one aggregation (reference multifill,
     core.py:978-1005).
 
-    Fills that share a source DataFrame are fused into ONE scan:
-    each row explodes into one struct per fill (the Spark equivalent of
-    the reference's touch-each-partition-once multifill property —
-    a plain union of N projections of the same table would scan it N
-    times, 25 staged fills = 25x the IO at 100 TB).  Distinct sources
-    are unioned as usual ahead of the single aggregation.
+    Each source relation is scanned once (grouping: :func:`_sources`).
+    Within a group, each distinct fill projection is one
+    ``named_struct`` computed once per row, and each row explodes into
+    one struct per fill; a filtered fill's element is
+    ``IF(cond, struct, NULL)`` and NULLs are dropped after the explode,
+    so a row whose condition is NULL is dropped as ``WHERE`` drops it.
+    Groups are unioned ahead of the single aggregation.
+
+    Sharing the struct matters: 25 fills of one projection under 25
+    filters, each inlined in the explode, ran 20x slower.  The
+    conditions go into the explode, not the projection: constraint
+    propagation doubles a Project's constraint set for every alias of
+    an expression in the OR pre-filter below it (2^25 for 25 fills).
     """
     if not fills:
         raise ValueError("need at least one fill")
-    for f in fills:
-        if len(f.cols) != spec.ndim:
-            raise ValueError(
-                f"fill needs one column per axis ({spec.ndim}); got {len(f.cols)}"
-            )
-        if spec.storage.needs_sample and f.sample is None:
-            raise ValueError(f"storage {spec.storage.value} requires a sample")
     weighted = any(f.weight is not None for f in fills) or spec.storage.needs_weight
-
-    # group staged fills by identical source DataFrame (object identity —
-    # the staged-fill pattern refills the same df)
-    groups: list[tuple[DataFrame, list[FillSpec]]] = []
-    for f in fills:
-        for df, fs in groups:
-            if df is f.df:
-                fs.append(f)
-                break
-        else:
-            groups.append((f.df, [f]))
-
     parts = []
-    for df, fs in groups:
-        if len(fs) == 1:
-            parts.append(_projection(spec, fs[0]))
-        else:
-            exploded = df.select(
-                F.explode(F.array(*[_fill_struct(spec, f) for f in fs])).alias("__f")
-            )
-            parts.append(exploded.select("__f.*"))
+    for df, fs, conds in _sources(fills):
+        pre: list = []
+        rows = [_fill_text(spec, f, weighted, pre) for f in fs]
+        src = _with_inputs(df, pre)
+        if len(rows) == 1:
+            parts.append(src.selectExpr(*_as(rows[0])))
+            continue
+        texts = ["named_struct(" + ", ".join(f"'{n}', {e}" for e, n in items)
+                 + ")" for items in rows]
+        alias: dict = {}
+        for t in texts:
+            alias.setdefault(t, f"__s{len(alias)}")
+        src = src.selectExpr("*", *(f"{t} AS {a}" for t, a in alias.items()))
+        structs = {a: F.col(a) for a in alias.values()}
+        elems = [structs[alias[t]] if c is None else F.when(c, structs[alias[t]])
+                 for t, c in zip(texts, conds)]
+        part = src.select(F.explode(F.array(*elems)).alias("__f"))
+        if any(c is not None for c in conds):
+            part = part.where("__f IS NOT NULL")
+        parts.append(part.select("__f.*"))
     unioned = parts[0]
     for p in parts[1:]:
         unioned = unioned.unionByName(p)
-    return unioned.groupBy(*[F.col(c) for c in spec.bin_cols]).agg(
-        *_storage_aggs(spec, weighted)
-    )
+    return unioned.groupBy(*spec.bin_cols).agg(*_aggs(spec, weighted))
 
 
 def fill_partitioned(
@@ -235,12 +287,13 @@ def fill_partitioned(
     """Explicit partitioned form: one partial histogram per input
     partition, keyed by ``part_id`` (reference ``partitioned_factory``,
     core.py:1313-1344).  ``collapse`` re-aggregates to the final form."""
-    f = FillSpec(df, tuple(cols), weight, sample)
     weighted = weight is not None or spec.storage.needs_weight
-    proj = _projection(spec, f).withColumn("part_id", F.spark_partition_id())
-    return proj.groupBy("part_id", *spec.bin_cols).agg(
-        *_storage_aggs(spec, weighted)
-    )
+    pre: list = []
+    items = _fill_text(spec, FillSpec(df, tuple(cols), weight, sample),
+                       weighted, pre)
+    proj = _with_inputs(df, pre).selectExpr(
+        "spark_partition_id() AS part_id", *_as(items))
+    return proj.groupBy("part_id", *spec.bin_cols).agg(*_aggs(spec, weighted))
 
 
 def collapse(partials: DataFrame, spec: HistogramSpec) -> DataFrame:
@@ -272,7 +325,7 @@ def sparse_schema(spec: HistogramSpec):
 
 
 # ---------------------------------------------------------------------------
-# SQL twin (oracle generation)
+# Aggregates as SQL text (engine and DuckDB oracle alike)
 # ---------------------------------------------------------------------------
 
 def _storage_aggs_sql(spec: HistogramSpec, weighted: bool) -> list[str]:
@@ -325,21 +378,9 @@ def fill_sql(
     from .oracle import sig_round_sql
 
     weighted = weight_sql is not None or spec.storage.needs_weight
-    binexprs = [
-        f"{bin_sql(ax, c)} AS {name}"
-        for ax, c, name in zip(spec.axes, cols, spec.bin_cols)
-    ]
-    inner_cols = list(binexprs)
-    inner_cols.append(f"CAST({weight_sql or '1.0'} AS DOUBLE) AS __w")
-    if sample_sql is not None:
-        s = f"CAST({sample_sql} AS DOUBLE)"
-        if spec.sample_shift:
-            # textually identical shift subtraction to the Spark side
-            s = f"({s} - {float(spec.sample_shift)!r})"
-        inner_cols.append(f"{s} AS __s")
-    else:
-        inner_cols.append("CAST(NULL AS DOUBLE) AS __s")
-    inner = f"SELECT {', '.join(inner_cols)} FROM {table}"
+    bins = [bin_sql(ax, c) for ax, c in zip(spec.axes, cols)]
+    items = _fill_items(spec, bins, weight_sql, sample_sql, weighted)
+    inner = f"SELECT {', '.join(_as(items))} FROM {table}"
     if where:
         inner += f" WHERE {where}"
     aggs = _storage_aggs_sql(spec, weighted)

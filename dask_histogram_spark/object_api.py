@@ -6,8 +6,9 @@ staged list at boost.py:304-311), builds the plan lazily on demand
 (boost.py:203-232), and computes to a concrete result.
 
 Spark mapping (SURVEY.md §3, lifecycle B): staged fills are
-:class:`FillSpec` descriptors; the "graph build" is a ``unionByName``
-of each fill's bin-index projection followed by ONE
+:class:`FillSpec` descriptors; the "graph build" is ``fill_multi``:
+one scan per source relation (``df.where`` views included), each row
+exploded into one bin-index struct per fill, then ONE
 ``groupBy(bins).agg(...)`` — the same single-pass-per-partition
 property the reference gets from its blockwise multifill layer
 (core.py:978-1005).

@@ -217,8 +217,8 @@ _hist_query(
 )
 
 # pinned (growth=False) category axes: out-of-set values fold into the
-# NULL-sentinel overflow slot in BOTH engines (binning.bin_column /
-# bin_sql emit the same CASE) — orders has status P outside the pinned
+# NULL-sentinel overflow slot in BOTH engines (binning._column_bin /
+# bin_sql bin them the same way) — orders has status P outside the pinned
 # {O, F} set, l_linenumber has 4..7 outside the pinned {1,2,3} set.
 # Both pinned variants gate in ONE driver row (registry consolidated to
 # the driver's 50-row budget, COVERAGE.md round-5 table): union under a
@@ -540,9 +540,7 @@ def _q_events_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     composes with any Column expression, including JSON paths."""
     ev = get_tables(spark, sf_dir)["events"]
     day = F.floor(F.unix_timestamp(F.col("ts")) / 86400).alias("key")
-    from .binning import bin_column
-
-    b = bin_column(_EVENTS_SPEC.axes[0], F.col("value")).alias("bin_0")
+    b = F.expr(_bin_sql(_EVENTS_SPEC.axes[0], "value")).alias("bin_0")
     daily = (
         ev.select(day, b)
         .groupBy("key", "bin_0")

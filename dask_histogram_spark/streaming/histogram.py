@@ -14,17 +14,17 @@ from __future__ import annotations
 from typing import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..fill import (
     ColumnLike,
+    FillSpec,
     WeightLike,
-    _as_col,
-    _sample_col,
-    _storage_aggs,
-    _weight_col,
+    _aggs,
+    _as,
+    _fill_text,
+    _quote,
+    _with_inputs,
 )
-from ..binning import bin_column
 from ..spec import HistogramSpec
 
 __all__ = ["streaming_histogram", "windowed_histogram"]
@@ -48,26 +48,17 @@ def windowed_histogram(
     """
     if df.isStreaming:
         df = df.withWatermark(ts_col, watermark)
-    win = F.window(F.col(ts_col), window, slide or window)
-    proj = [
-        bin_column(ax, _as_col(c)).alias(name)
-        for ax, c, name in zip(spec.axes, cols, spec.bin_cols)
-    ]
-    # _sample_col, not a bare cast: the spec's sample_shift must apply
-    # on streams exactly as in batch fills
-    proj.append(_weight_col(weight).alias("__w"))
-    proj.append(_sample_col(spec, sample).alias("__s"))
+    win = f"window({_quote(ts_col)}, '{window}', '{slide or window}') AS __win"
     weighted = weight is not None or spec.storage.needs_weight
+    pre: list = []
+    items = _fill_text(spec, FillSpec(df, tuple(cols), weight, sample),
+                       weighted, pre)
     return (
-        df.select(win.alias("__win"), *proj)
+        _with_inputs(df, pre).selectExpr(win, *_as(items))
         .groupBy("__win", *spec.bin_cols)
-        .agg(*_storage_aggs(spec, weighted))
-        .select(
-            F.col("__win.start").alias("window_start"),
-            F.col("__win.end").alias("window_end"),
-            *spec.bin_cols,
-            *spec.value_cols,
-        )
+        .agg(*_aggs(spec, weighted))
+        .selectExpr("__win.start AS window_start", "__win.end AS window_end",
+                    *(f"`{c}`" for c in spec.bin_cols + spec.value_cols))
     )
 
 

@@ -265,3 +265,97 @@ def test_mismatched_sample_shift_arithmetic_raises(spark, gauss1d):
                         storage=dhs.Storage.MEAN)
     with pytest.raises(ValueError, match="sample_shift"):
         a + b
+
+
+# ---------------------------------------------------------------------------
+# bin_sql is parsed the same way by Spark and DuckDB
+# ---------------------------------------------------------------------------
+
+def _fill_vs_duckdb(spark, pdf, spec, col):
+    """Sorted sparse rows of ``fill`` (Spark) and ``fill_sql`` (DuckDB)."""
+    import duckdb
+
+    got = dhs.fill(spark.createDataFrame(pdf), [col], spec).collect()
+    con = duckdb.connect()
+    con.register("t", pdf)
+    exp = con.sql(dhs.fill_sql("t", [col], spec, round_digits=None)).fetchall()
+    return sorted(map(tuple, got), key=repr), sorted(exp, key=repr)
+
+
+def test_variable_infinite_edges_match_duckdb(spark):
+    import pandas as pd
+
+    x = [-np.inf, -5.0, -1.0, -0.5, 0.0, 0.5, 1.0, 5.0, np.inf, np.nan]
+    spec = dhs.HistogramSpec(axes=(dhs.Variable([-np.inf, -1, 0, 1, np.inf]),))
+    got, exp = _fill_vs_duckdb(spark, pd.DataFrame({"x": x}), spec, "x")
+    assert got == exp
+    # -inf is in bin 0 ([-inf, -1)); +inf and NaN overflow
+    assert got == [(0, 2.0), (1, 2.0), (2, 2.0), (3, 2.0), (4, 2.0)]
+
+
+def test_string_categories_with_escapes_match_duckdb(spark):
+    import pandas as pd
+
+    cats = ["a\\b", "o'k"]
+    values = ["a\\b", "a\\b", "o'k", "ok", "ab", "a\\\\b"]
+    spec = dhs.HistogramSpec(axes=(dhs.StrCategory(cats, growth=False),))
+    got, exp = _fill_vs_duckdb(spark, pd.DataFrame({"c": values}), spec, "c")
+    assert got == exp
+    assert dict(got) == {"a\\b": 2.0, "o'k": 1.0, None: 3.0}
+
+
+# ---------------------------------------------------------------------------
+# fill_multi folds df.where views of one relation into one scan
+# ---------------------------------------------------------------------------
+
+@pytest.fixture(scope="module")
+def fold_path(spark, tmp_path_factory):
+    """A parquet table with a nullable predicate column ``k``."""
+    path = str(tmp_path_factory.mktemp("fold") / "t.parquet")
+    spark.range(4000).selectExpr(
+        "CAST(id % 97 AS DOUBLE) / 10.0 - 4.0 AS x",
+        "IF(id % 7 = 0, NULL, CAST(id % 10 AS INT)) AS k",
+    ).repartition(3).write.parquet(path)
+    return path
+
+
+def _fold_cases(spark, path):
+    """Staged fills, with the FileScans the fused plan must have."""
+    from pyspark.sql import functions as F
+
+    df = spark.read.parquet(path)
+    pos, neg = df.where(F.col("k") > 4), df.where(F.col("k") <= 4)
+    keys = spark.createDataFrame([(1,), (2,)], "k int")
+    return {
+        # IF(NULL, ...) is NULL and dropped, as WHERE drops the row
+        "null_predicate": ([df, pos], 1),
+        "every_fill_filtered": ([pos, neg], 1),
+        "nondeterministic_filter": ([df, df.where(F.rand(1) < 0.5)], 2),
+        "subquery_filter": ([df, df.where(F.col("k").isin(keys.select("k")))], 2),
+        "separate_reads": ([df, spark.read.parquet(path).where(F.col("k") > 4)], 2),
+        "filtered_projection": ([df, df.select("x", "k").where(F.col("k") > 4)], 2),
+        "chained_wheres": ([df, df.where(F.col("k") > 2).where(F.col("x") < 1.0)], 1),
+    }
+
+
+@pytest.mark.parametrize("case", [
+    "null_predicate", "every_fill_filtered", "nondeterministic_filter",
+    "subquery_filter", "separate_reads", "filtered_projection",
+    "chained_wheres",
+])
+def test_fold_matches_separate_fills(spark, fold_path, case):
+    """The fused fill equals the sum of the fills computed one by one,
+    and df.where views of one relation share its scan; a filter that is
+    non-deterministic or has a subquery, a second read of the path and
+    a filtered projection each keep their own scan."""
+    frames, scans = _fold_cases(spark, fold_path)[case]
+    assert spark.read.parquet(fold_path).where("k IS NULL").count() > 0
+    fills = [dhs.FillSpec(d, ("x",), w) for d, w in zip(frames, (None, "k"))]
+    spec = dhs.HistogramSpec(axes=(dhs.Regular(12, -3.0, 3.0),))
+    fused = dhs.fill_multi(fills, spec)
+    plan = fused._jdf.queryExecution().executedPlan().toString()
+    got = dhs.AggHistogram(fused, spec).values(flow=True)
+    exp = sum(dhs.AggHistogram(dhs.fill_multi([f], spec), spec).values(flow=True)
+              for f in fills)
+    np.testing.assert_allclose(got, exp)
+    assert plan.count("FileScan") == scans, plan

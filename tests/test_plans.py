@@ -487,3 +487,55 @@ def test_lm_score_scoring_join_broadcasts_small_model(spark):
     final = plan.split("== Initial Plan ==")[0]
     assert "BroadcastHashJoin" in final, final[:1200]
     assert "SortMergeJoin" not in final, final[:1200]
+
+
+@pytest.fixture(scope="module")
+def staged_path(spark, tmp_path_factory):
+    """A small parquet table shaped like perfbench hist_scan's."""
+    path = str(tmp_path_factory.mktemp("staged") / "t.parquet")
+    spark.range(5000).selectExpr(
+        "CAST(id % 89 AS DOUBLE) / 10.0 - 4.0 AS x",
+        "CAST(id % 83 AS DOUBLE) / 10.0 - 4.0 AS y",
+        "CAST(id % 79 AS DOUBLE) / 8.0 AS z",
+        "CAST(id % 5 AS DOUBLE) / 4.0 AS w",
+        "element_at(array('alpha', 'beta', 'gamma'), CAST(id % 3 AS INT) + 1) AS cat",
+        "CAST(id % 25 AS INT) + 1 AS icat",
+    ).repartition(4).write.parquet(path)
+    return path
+
+
+def test_staged_histogram_reads_its_table_once(spark, staged_path):
+    """Six fills on df and two on df.where views: one FileScan, one
+    Generate, no Union."""
+    import dask_histogram_spark as dhs
+    from pyspark.sql import functions as F
+
+    df = spark.read.parquet(staged_path)
+    h = dhs.Histogram(dhs.Regular(50, -5.0, 5.0))
+    h.fill(df, "x").fill(df, "y").fill(df, F.col("z") - 5.0)
+    h.fill(df, "x", weight="w").fill(df, "y", weight="w")
+    h.fill(df.where(F.col("cat") == "alpha"), "x")
+    h.fill(df.where(F.col("cat") == "beta"), "y")
+    h.fill(df, F.col("x") * 2.0)
+    plan = _executed_plan(h.to_agg().to_sparse())
+    assert plan.count("FileScan") == 1, plan
+    assert plan.count("Generate") == 1, plan
+    assert "Union" not in plan, plan
+
+
+def test_all_filtered_staged_fills_share_a_pushed_down_scan(spark, staged_path):
+    """The reference's 25 fills over df.where(icat == i): one FileScan
+    that carries the OR of the conditions as a pushed filter."""
+    import dask_histogram_spark as dhs
+    from pyspark.sql import functions as F
+
+    df = spark.read.parquet(staged_path)
+    h = dhs.Histogram(dhs.IntCategory(growth=True), dhs.Regular(8, -3.5, 3.5),
+                      storage=dhs.Storage.WEIGHT)
+    for i in range(25):
+        h.fill(df.where(F.col("icat") == i + 1), "icat", "x", weight="w")
+    plan = _executed_plan(h.to_agg().to_sparse())
+    scans = [l for l in plan.splitlines() if "FileScan" in l]
+    assert len(scans) == 1, plan
+    assert "PushedFilters: []" not in scans[0] and "icat" in scans[0].split(
+        "PushedFilters: ")[1], scans[0]

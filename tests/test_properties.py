@@ -79,10 +79,10 @@ def test_regular_binning_invariants_bulk(spark):
     df = spark.createDataFrame(pdf)
     from pyspark.sql import functions as F
 
-    from dask_histogram_spark.binning import bin_column
+    from dask_histogram_spark.binning import bin_sql
 
     out = df.select(
-        F.col("x"), bin_column(Regular(n, lo, hi), F.col("x")).alias("b")
+        F.col("x"), F.expr(bin_sql(Regular(n, lo, hi), "x")).alias("b")
     ).toPandas()
     xs, bs = out.x.to_numpy(), out.b.to_numpy()
     nan = np.isnan(xs)
@@ -115,10 +115,10 @@ def test_variable_binning_matches_searchsorted_bulk(spark):
     df = spark.createDataFrame(pdf)
     from pyspark.sql import functions as F
 
-    from dask_histogram_spark.binning import bin_column
+    from dask_histogram_spark.binning import bin_sql
 
     out = df.select(
-        F.col("x"), bin_column(Variable(edges), F.col("x")).alias("b")
+        F.col("x"), F.expr(bin_sql(Variable(edges), "x")).alias("b")
     ).toPandas()
     xs, bs = out.x.to_numpy(), out.b.to_numpy()
     nan = np.isnan(xs)
